@@ -3220,7 +3220,7 @@ object SparkEntry {
       // FRESH session off the previous epoch's parquet state (load
       // index → band the shard uncapped → verify → extend ledger →
       // seed the clustering → forward index/pairs/labels/kept/
-      // retractions). CHAINED LAW: epoch 3's labels == one-shot
+      // retractions). CHAINED LAW: epoch 2's labels == one-shot
       // duplicateClusters(minhashPairs(grown corpus)) at CLUSTER
       // level — the oracle replays brute-force cross-Jaccard pairs
       // plus min-label connected components (recursive reachability),
@@ -3249,7 +3249,7 @@ object SparkEntry {
 
     "q408_stream_epoch" -> ((s, dir) => {
       // The STREAMING crawl-dedup loop end-to-end: documents arrive
-      // as 3 real micro-batches (maxFilesPerTrigger=1), each driving
+      // as 2 real micro-batches (maxFilesPerTrigger=1), each driving
       // one dedupEpoch inside foreachBatch with epoch=<batchId>
       // parquet state; the head state's labels must equal the q403
       // one-shot answer — the chained law is split-agnostic, so the
@@ -11223,7 +11223,7 @@ object SparkEntry {
     // cross-Jaccard pairs of the FULL corpus (q34's oracle) driven
     // through min-label connected components via recursive
     // reachability (reachable sets are tiny: near-dup cliques). The
-    // three-epoch parquet round trip and the warm-started clustering
+    // two-epoch parquet round trip and the warm-started clustering
     // are Spark-side; the oracle only knows the one-shot answer.
     "q403_dedup_epoch" ->
       """WITH RECURSIVE toks AS (

@@ -1,9 +1,9 @@
 package graft.estimator
 
-import org.apache.spark.ml.{Estimator, Model}
+import org.apache.spark.ml.Model
 import org.apache.spark.ml.param.{BooleanParam, DoubleParam, ParamMap}
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable, Identifiable}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
@@ -11,15 +11,15 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * `x / Σx`, optionally followed by natural log. Semantics preserved:
   * with `norm=false` the input passes through unscaled; `log(x≤0)` yields
   * null (reference tests read those back as 0.0 on parquet round-trip).
-  * Fit is one `agg(sum, min)` — the reference collects the whole column
-  * to the driver (Scaler.scala:56), which would OOM at scale.
+  * Fit is one `agg(sum, min)`, shared with every other [[AggregateFit]]
+  * stage of an [[AggregateFitPipeline]] — the reference collects the
+  * whole column to the driver (Scaler.scala:56), which would OOM at scale.
   *
   * Fitted state lives in Params so `Pipeline.save/load` round-trips the
   * model through the stock `DefaultParams` writers.
   */
 class Scaler(override val uid: String)
-  extends Estimator[ScalerModel]
-  with InputOutputColParams
+  extends AggregateFit[ScalerModel]
   with DefaultParamsWritable {
 
   def this() = this(Identifiable.randomUID("Scaler"))
@@ -39,18 +39,14 @@ class Scaler(override val uid: String)
   override def transformSchema(schema: StructType): StructType =
     schema.add($(outputCol), DoubleType, nullable = true)
 
-  override def fit(dataset: Dataset[_]): ScalerModel = {
-    transformSchema(dataset.schema, logging = true)
-    val (s, m) =
-      if ($(norm)) {
-        // empty / all-null input sums to SQL NULL — treat as 0 (pass-through)
-        val row = dataset.toDF()
-          .agg(sum(col($(inputCol)).cast("double")),
-            min(col($(inputCol)).cast("double"))).head()
-        (if (row.isNullAt(0)) 0.0 else row.getDouble(0),
-          if (row.isNullAt(1)) 0.0 else row.getDouble(1))
-      } else (0.0, 0.0)
-    copyValues(new ScalerModel(uid + "_model").setSum(s).setMin(m))
+  override protected def aggregates: Seq[Column] =
+    if ($(norm)) Seq(sum(col($(inputCol)).cast("double")), min(col($(inputCol)).cast("double")))
+    else Nil
+
+  override protected def fromAggregates(values: Row): ScalerModel = {
+    // empty / all-null input sums to SQL NULL — treat as 0 (pass-through)
+    def orZero(i: Int) = if (values.length <= i || values.isNullAt(i)) 0.0 else values.getDouble(i)
+    copyValues(new ScalerModel(uid + "_model").setSum(orZero(0)).setMin(orZero(1)))
       .setParent(this)
   }
 }
@@ -115,12 +111,12 @@ object ScalerModel extends DefaultParamsReadable[ScalerModel]
 /** Zero-mean / unit-variance scaler over a scalar column (reference
   * `estimator/StandardScaler.scala:30-102` — population σ, matching the
   * reference's `/ N` divisor, NOT Spark's sample-σ `stddev`). Fit is one
-  * `agg(avg, stddev_pop)` instead of two RDD reduces; transform is a pure
+  * `agg(avg, stddev_pop)` instead of two RDD reduces, shared with every
+  * other [[AggregateFit]] stage of an [[AggregateFitPipeline]]; transform is a pure
   * null-propagating column expression instead of the reference's
   * null-boxing UDF. */
 class GraftStandardScaler(override val uid: String)
-  extends Estimator[GraftStandardScalerModel]
-  with InputOutputColParams
+  extends AggregateFit[GraftStandardScalerModel]
   with DefaultParamsWritable {
 
   def this() = this(Identifiable.randomUID("GraftStandardScaler"))
@@ -132,15 +128,13 @@ class GraftStandardScaler(override val uid: String)
   override def transformSchema(schema: StructType): StructType =
     schema.add($(outputCol), DoubleType, nullable = true)
 
-  override def fit(dataset: Dataset[_]): GraftStandardScalerModel = {
-    transformSchema(dataset.schema, logging = true)
-    val row = dataset.toDF().agg(
-      avg(col($(inputCol)).cast("double")),
-      stddev_pop(col($(inputCol)).cast("double"))).head()
+  override protected def aggregates: Seq[Column] =
+    Seq(avg(col($(inputCol)).cast("double")), stddev_pop(col($(inputCol)).cast("double")))
+
+  override protected def fromAggregates(values: Row): GraftStandardScalerModel =
     copyValues(new GraftStandardScalerModel(uid + "_model")
-      .setMean(row.getDouble(0)).setStd(row.getDouble(1)))
+      .setMean(values.getDouble(0)).setStd(values.getDouble(1)))
       .setParent(this)
-  }
 }
 
 object GraftStandardScaler extends DefaultParamsReadable[GraftStandardScaler]

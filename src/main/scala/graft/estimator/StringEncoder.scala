@@ -3,10 +3,11 @@ package graft.estimator
 import scala.util.hashing.MurmurHash3
 
 import org.apache.spark.ml.{Estimator, Model}
+import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.feature.{HashingTF, IDF, IDFModel}
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.linalg.SQLDataTypes.VectorType
-import org.apache.spark.ml.param.{IntArrayParam, Param, ParamMap}
+import org.apache.spark.ml.param.{IntArrayParam, LongParam, Param, ParamMap, ParamValidators}
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable, Identifiable, MLWriter}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -21,7 +22,8 @@ import org.apache.spark.sql.types.StructType
   * different seed, so output parity requires `MurmurHash3.stringHash`),
   * and transform emits a dense count vector over that space. The hash
   * space persists as a param, so fitted pipelines save/load with the
-  * stock writers.
+  * stock writers. The output column carries its vector size as ML
+  * attribute metadata, so `VectorAssembler` needs no job to learn it.
   *
   * `TFIDF` method: HashingTF + IDF composition, temp columns dropped.
   * The IDF statistics live in a nested Spark model, which params cannot
@@ -61,19 +63,24 @@ class StringEncoder(
     this(method, tokeniser, Identifiable.randomUID("StringEncoder"))
   def this(uid: String) = this(StringEncoder.Murmur, StringEncoder.WhiteSpaceToken, uid)
 
-  override def copy(extra: ParamMap): this.type = defaultCopy(extra)
+  /** Cap on the Murmur vocabulary (distinct token hashes). The fitted
+    * hash space is collected to the driver (reference semantics), so an
+    * unbounded web-scale vocabulary would OOM the driver — fail fast with
+    * an explanation instead. Raise explicitly for known-bounded spaces. */
+  final val maxVocab: LongParam = new LongParam(this, "maxVocab",
+    "cap on the distinct token hashes a Murmur fit collects", ParamValidators.gt(0))
+  setDefault(maxVocab -> 10000000L)
+
+  // the method and tokeniser are constructor state, not params
+  override def copy(extra: ParamMap): StringEncoder =
+    copyValues(new StringEncoder(method, tokeniser, uid), extra)
   override def transformSchema(schema: StructType): StructType =
     schema.add($(outputCol), VectorType, nullable = true)
 
   def setInputCol(value: String): this.type = set(inputCol, value)
   def setOutputCol(value: String): this.type = set(outputCol, value)
-
-  /** Cap on the Murmur vocabulary (distinct token hashes). The fitted
-    * hash space is collected to the driver (reference semantics), so an
-    * unbounded web-scale vocabulary would OOM the driver — fail fast with
-    * an explanation instead. Raise explicitly for known-bounded spaces. */
-  private var maxVocab: Long = 10000000L
-  def setMaxVocab(n: Long): this.type = { require(n > 0); maxVocab = n; this }
+  def setMaxVocab(n: Long): this.type = set(maxVocab, n)
+  def getMaxVocab: Long = $(maxVocab)
 
   override def fit(dataset: Dataset[_]): StringEncoderModel = {
     transformSchema(dataset.schema, logging = true)
@@ -89,19 +96,20 @@ class StringEncoder(
           .select(explode(col(tokCol)).as("t"))
           .select(murmurUdf(col("t")).as("h"))
           .distinct()
-        // The collect below is the one driver-side cardinality bomb in
-        // the surface: count first (cheap, map-side partial agg) and
-        // refuse oversized vocabularies instead of OOMing the driver.
-        val n = distinctHashes.count()
-        if (n > maxVocab) throw new IllegalStateException(
-          s"StringEncoder.Murmur vocabulary has $n distinct token hashes " +
-            s"(> maxVocab=$maxVocab); the fitted hash space is collected to " +
+        // The collect is the one driver-side cardinality bomb in the
+        // surface: one pass brings back at most cap + 1 hashes, and more
+        // than the cap is refused instead of OOMing the driver. The sort
+        // runs on the driver: `orderBy(...).limit(n)` would plan a
+        // top-n that allocates n slots per task.
+        val cap = $(maxVocab)
+        val space = distinctHashes.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt)
+          .collect().map(_.getInt(0))
+        if (space.length > cap) throw new IllegalStateException(
+          s"StringEncoder.Murmur vocabulary has ${space.length}+ distinct token hashes " +
+            s"(> maxVocab=$cap); the fitted hash space is collected to " +
             "the driver. Normalize/filter tokens, use the TFIDF method, or " +
             "raise the cap via setMaxVocab if the space is known to fit.")
-        val space = distinctHashes
-          .orderBy("h")
-          .collect()
-          .map(_.getInt(0))
+        java.util.Arrays.sort(space)
         new StringEncoderModel(uid + "_model").setHashSpace(space)
           .setInputCol($(inputCol)).setOutputCol($(outputCol))
           .setParent(this)
@@ -137,6 +145,7 @@ final case class MurmurFitted(hashSpace: Array[Int], outputCol: String)
       Vectors.dense(counts)
     })
     df.withColumn(outputCol, enc(col(tokenCol)))
+      .withMetadata(outputCol, new AttributeGroup(outputCol, space.length).toMetadata())
   }
 }
 

@@ -1,8 +1,11 @@
 package graft.evaluation
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.DataFrame
 
 import graft.functional.{Fail, MayFail}
+import graft.physical.Optimise
 
 /** Comparator / validation / selection suite (reference
   * `evaluation/{FeatureCompare,FeatureCompareVector,ModelCompare,
@@ -137,18 +140,24 @@ trait Validation[M <: Measure] {
 }
 
 /** Equal random folds, mean of per-fold scores (reference Validation.scala:
-  * 34-54 — folds reassembled by `reduce(_ union _)`). */
+  * 34-54 — folds reassembled by `reduce(_ union _)`). Each fold is
+  * materialised once, so the fits and scores read it instead of
+  * re-sorting and re-sampling the whole input; a checkpointed fold holds
+  * the same rows in the same partitions, so the scores are unchanged. */
 final case class CrossValidation[M <: Measure](measure: M, nFolds: Int = 3)
     extends Validation[M] {
   override def run(df: DataFrame, design: ModelDesign, feature: FeatureColumn): MayFail[Double] =
     MayFail {
-      val splits = df.randomSplit(Array.fill(nFolds)(1.0 / nFolds), seed = 42L)
-      val folds = (0 until nFolds).map { i =>
-        val train = splits.zipWithIndex.filter(_._2 != i).map(_._1).reduce(_ union _)
-        val test = splits(i)
-        design.toSpecimen(feature, train).score(test, measure).get
-      }
-      folds.sum / nFolds.toDouble
+      val folds = ArrayBuffer.empty[DataFrame]
+      try {
+        df.randomSplit(Array.fill(nFolds)(1.0 / nFolds), seed = 42L)
+          .foreach(split => folds += split.localCheckpoint(eager = true))
+        val scores = folds.indices.map { i =>
+          val train = folds.zipWithIndex.filter(_._2 != i).map(_._1).reduce(_ union _)
+          design.toSpecimen(feature, train).score(folds(i), measure).get
+        }
+        scores.sum / nFolds.toDouble
+      } finally folds.foreach(Optimise.releaseCheckpoint)
     }
 }
 

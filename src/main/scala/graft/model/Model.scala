@@ -8,7 +8,7 @@ import org.apache.spark.ml.regression.LinearRegression
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
-import graft.estimator.{GraftStandardScaler, Scaler, StringEncoder}
+import graft.estimator.{AggregateFitPipeline, GraftStandardScaler, Scaler, StringEncoder}
 import graft.evaluation.{AssemblyFeature, FeatureColumn}
 import graft.functional.{MayFail, Ok}
 
@@ -30,7 +30,8 @@ object Features {
     new Pipeline().setStages(stages.toArray)
   }
 
-  /** A zero-mean/unit-variance scaler per DoubleType column. */
+  /** A zero-mean/unit-variance scaler per DoubleType column, all fitted
+    * from one aggregate. */
   def standardiseNumbers(
       df: DataFrame,
       suffix: String = "",
@@ -39,10 +40,11 @@ object Features {
       case StructField(c, DoubleType, _, _) if !ignoreColumns.contains(c) =>
         new GraftStandardScaler().setInputCol(c).setOutputCol(c + suffix)
     }
-    new Pipeline().setStages(stages.toArray)
+    new AggregateFitPipeline().setStages(stages.toArray)
   }
 
-  /** A ÷sum (optionally log) scaler per DoubleType column. */
+  /** A ÷sum (optionally log) scaler per DoubleType column, all fitted
+    * from one aggregate. */
   def scaleNumbers(
       df: DataFrame,
       normalised: Boolean = true,
@@ -54,7 +56,7 @@ object Features {
         new Scaler().setInputCol(c).setOutputCol(c + suffix)
           .setLogScale(logScale).setNorm(normalised)
     }
-    new Pipeline().setStages(stages.toArray)
+    new AggregateFitPipeline().setStages(stages.toArray)
   }
 
   /** VectorAssembler over every numeric / numeric-array column, sorted by

@@ -64,6 +64,19 @@ class MLSpec extends AnyFunSuite {
     assert(out.columns.toSet == train.columns.toSet + "enc")
   }
 
+  test("StringEncoder.copy keeps the method and the vocabulary cap") {
+    import org.apache.spark.ml.param.ParamMap
+    val tfidf = new StringEncoder(StringEncoder.TFIDF())
+      .setInputCol("s").setOutputCol("enc").setMaxVocab(3).copy(ParamMap.empty)
+    assert(tfidf.getMaxVocab == 3)
+    val m = tfidf.fit(train)
+    assert(m.getOrDefault(m.methodName) == "tfidf")
+    // train.s has 4 distinct tokens: a copy still refuses them under a cap of 3
+    val capped = new StringEncoder().setInputCol("s").setOutputCol("enc")
+      .setMaxVocab(3).copy(ParamMap.empty)
+    assert(intercept[IllegalStateException](capped.fit(train)).getMessage.contains("maxVocab=3"))
+  }
+
   test("Scaler divides by column sum; log variant applies ln after") {
     // d values: 0,1,2,3 → sum 6
     val m = new Scaler().setInputCol("d").setOutputCol("sc").fit(train)
@@ -250,6 +263,16 @@ class MLSpec extends AnyFunSuite {
     val encB = loaded.transform(train).select("enc").collect()
       .map(_.getAs[org.apache.spark.ml.linalg.Vector](0)).toSeq
     assert(encA == encB)
+  }
+
+  test("Features scaler pipelines save and load as a plain Pipeline") {
+    import org.apache.spark.ml.Pipeline
+    val dir = java.nio.file.Files.createTempDirectory("graft_scalers").toString + "/p"
+    Features.standardiseNumbers(train, suffix = "_z").write.save(dir)
+    val loaded = Pipeline.load(dir)
+    assert(loaded.getStages.length == 3)
+    val z = loaded.fit(train).transform(train).orderBy("i").select("d_z").as[Double].collect()
+    assert(math.abs(z(0) - (0.0 - 1.5) / math.sqrt(1.25)) < 1e-12)
   }
 
   test("TFIDF-fitted encoder refuses persistence with a clear error") {
