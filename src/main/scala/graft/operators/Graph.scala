@@ -144,9 +144,7 @@ object Graph {
     val danglingNodes = nodes.join(outw, Seq("node"), "left_anti")
       .localCheckpoint(true)
     val hasDangling = danglingNodes.limit(1).count() > 0
-    var ranks = nodes.withColumn("rank", lit(scale)).localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val prevRanks = ranks
+    val ranks = Iterate(nodes.withColumn("rank", lit(scale)), iterations) { (ranks, _) =>
       val dangling = if (!hasDangling) 0L
       else ranks.join(danglingNodes, Seq("node"), "left_semi")
         .agg(coalesce(sum(expr(s"(rank * $dampNum) div $dampDen")), lit(0L)))
@@ -157,7 +155,7 @@ object Graph {
           expr(s"(rank * $dampNum * w) div (${dampDen}L * outw)").as("c"))
       val in = contrib.groupBy("node").agg(sum("c").as("in_mass"))
       val joined = nodes.join(in, Seq("node"), "left")
-      ranks = (seeds match {
+      seeds match {
         case None =>
           val perNodeBase = teleport + dangling / n
           joined.select(col("node"),
@@ -171,12 +169,8 @@ object Graph {
               (coalesce(col("in_mass"), lit(0L)) +
                 when(col("__seed").isNotNull, lit(perSeed)).otherwise(lit(0L)))
                 .as("rank"))
-      }).localCheckpoint(true)
-      // the new rank vector is materialized — the superseded round's
-      // pinned blocks can go (long sessions would otherwise accumulate
-      // one rank frame per iteration per invocation)
-      Optimise.releaseCheckpoint(prevRanks)
-    }
+      }
+    }.state
     val result = ranks.withColumn("score",
       col("rank").cast("double") / lit((n * scale).toDouble))
       .localCheckpoint(true)
