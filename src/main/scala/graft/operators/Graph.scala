@@ -680,14 +680,17 @@ object Graph {
         col("w").isNotNull)
       .groupBy("src", "dst").agg(min(col("w")).as("w"))
       .persist()
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
+    val seedDist = seeds.select(col(seedCol).as("node")).distinct()
       .filter(col("node").isNotNull)
       .withColumn("dist", lit(0.0))
-      .localCheckpoint(true)
-    var r = 0
-    var done = dist.limit(1).count() == 0
-    while (!done && r < maxRounds) {
-      r += 1
+    // a round that improves nothing is dropped and the previous
+    // distances kept
+    val dist = Iterate(seedDist, maxRounds,
+        done = _.limit(1).count() == 0,
+        stop = (merged, _) =>
+          if (merged.filter(col("__chg")).limit(1).count() == 0) Iterate.Unchanged
+          else Iterate.Continue,
+        view = _.select("node", "dist")) { (dist, _) =>
       val cand = e
         .join(dist.select(col("node").as("src"), col("dist").as("__pd")),
           Seq("src"))
@@ -696,22 +699,14 @@ object Graph {
       // ONE full-outer merge per round carrying an improvement flag —
       // the convergence probe then scans the checkpointed merge
       // instead of re-running the relaxation join
-      val merged = dist.join(cand, Seq("node"), "full")
+      dist.join(cand, Seq("node"), "full")
         .select(col("node"),
           least(coalesce(col("dist"), col("__nd")),
             coalesce(col("__nd"), col("dist"))).as("dist"),
           (col("dist").isNull ||
             (col("__nd").isNotNull && col("__nd") < col("dist")))
             .as("__chg"))
-        .localCheckpoint(true)
-      done = merged.filter(col("__chg")).limit(1).count() == 0
-      if (!done) {
-        Optimise.releaseCheckpoint(dist)
-        dist = merged.select("node", "dist")
-      } else {
-        Optimise.releaseCheckpoint(merged)
-      }
-    }
+    }.state
     e.unpersist()
     dist
   }
