@@ -457,50 +457,36 @@ object Graph {
       val e2 = und.select(col("a").as("src"), col("b").as("dst"))
         .union(und.select(col("b").as("src"), col("a").as("dst")))
         .persist()
-      var alive = e2.select(col("src").as("node")).distinct().localCheckpoint(true)
-      var aliveN = alive.count()
-      var converged = false
-      var round = 0
-      var deg: DataFrame = null
-      while (!converged && round < maxRounds) {
-        val prevDeg = deg
-        val prevAlive = alive
-        deg = e2
+      // the state is the survivor frame `(node, core_degree)`; the
+      // round count of survivors carries over to the next stop test
+      var n = 0L
+      val peeled = Iterate(e2.select(col("src").as("node")).distinct(), maxRounds,
+          done = alive => { n = alive.count(); n == 0 },
+          stop = (deg, _) => {
+            val m = deg.count()
+            val verdict = if (m == n || m == 0) Iterate.Converged else Iterate.Continue
+            n = m
+            verdict
+          }) { (deg, _) =>
+        val alive = deg.select("node")
+        e2
           .join(alive.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
           .join(alive.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
           .groupBy(col("src").as("node"))
           .agg(count(lit(1)).as("core_degree"))
           .filter(col("core_degree") >= k)
-          .localCheckpoint(true)
-        // the new survivor frame is materialized — release the previous
-        // round's pinned blocks (alive is a projection of deg, so the
-        // first round also releases the seed alive checkpoint)
-        if (prevDeg != null) Optimise.releaseCheckpoint(prevDeg)
-        else Optimise.releaseCheckpoint(prevAlive)
-        val nextAlive = deg.select("node")
-        val nextN = deg.count()
-        converged = nextN == aliveN
-        alive = nextAlive
-        aliveN = nextN
-        round += 1
-        if (aliveN == 0) converged = true
       }
       val result =
-        if (aliveN == 0)
-          alive.withColumn("core_degree", lit(0L)).filter(lit(false))
-        else deg
+        if (n == 0)
+          peeled.state.select("node").withColumn("core_degree", lit(0L)).filter(lit(false))
+        else peeled.state
       e2.unpersist()
-      (result, converged)
+      (result, peeled.converged)
     }
     run.flatMap { case (result, converged) =>
-      if (converged) graft.functional.Ok(result)
-      else {
-        val err = new IllegalStateException(
-          s"kCore: peeling did not stabilize within $maxRounds rounds; " +
-            "the returned survivor set is still shrinking — raise maxRounds")
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(err.getMessage)
-        graft.functional.IgnorableFail(err, result)
-      }
+      Iterate.settle(converged, result)(
+        s"kCore: peeling did not stabilize within $maxRounds rounds; " +
+          "the returned survivor set is still shrinking — raise maxRounds")
     }
   }
 
