@@ -1942,13 +1942,15 @@ object Graph {
       val adj = und.select(col("a").as("src"), col("b").as("dst"))
         .union(und.select(col("b").as("src"), col("a").as("dst")))
         .persist()
-      var h = adj.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("h"))
-        .localCheckpoint(true)
-      var converged = h.isEmpty
-      var round = 0
-      while (!converged && round < maxRounds) {
-        val prevH = h
+      val out = Iterate(
+          adj.groupBy(col("src").as("node")).agg(count(lit(1)).as("h")),
+          maxRounds,
+          done = _.isEmpty,
+          stop = (next, prevH) =>
+            if (next.join(prevH.select(col("node"), col("h").as("__p")), Seq("node"))
+                .filter(col("h") =!= col("__p"))
+                .limit(1).count() == 0) Iterate.Converged
+            else Iterate.Continue) { (h, _) =>
         // neighbor values, ranked within each node's neighborhood;
         // H-index = max over the ranked list of min(rank, value)
         val nb = adj
@@ -1956,32 +1958,18 @@ object Graph {
             Seq("dst"))
         val w = Window.partitionBy("src")
           .orderBy(col("__hv").desc, col("dst"))
-        val next = nb
+        nb
           .withColumn("__r", row_number().over(w).cast("long"))
           .groupBy(col("src").as("node"))
           .agg(max(least(col("__r"), col("__hv"))).as("h"))
-          .localCheckpoint(true)
-        val changed = next.join(
-            prevH.select(col("node"), col("h").as("__p")), Seq("node"))
-          .filter(col("h") =!= col("__p"))
-          .limit(1).count()
-        Optimise.releaseCheckpoint(prevH)
-        h = next
-        converged = changed == 0
-        round += 1
       }
       adj.unpersist()
-      (h.select(col("node"), col("h").as("coreness")), converged)
+      (out.state.select(col("node"), col("h").as("coreness")), out.converged)
     }
     run.flatMap { case (result, converged) =>
-      if (converged) graft.functional.Ok(result)
-      else {
-        val err = new IllegalStateException(
-          s"coreNumber: H-index propagation did not stabilize within " +
-            s"$maxRounds rounds — raise maxRounds")
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(err.getMessage)
-        graft.functional.IgnorableFail(err, result)
-      }
+      Iterate.settle(converged, result)(
+        s"coreNumber: H-index propagation did not stabilize within " +
+          s"$maxRounds rounds — raise maxRounds")
     }
   }
 
