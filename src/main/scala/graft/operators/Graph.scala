@@ -2003,20 +2003,26 @@ object Graph {
     val run = MayFail {
       require(k >= 3, s"k must be >= 3: $k")
       require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-      var e = edges
-        .select(least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull &&
-          col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint(true)
-      var n = e.count()
-      var converged = n == 0L
-      var round = 0
-      var sup: DataFrame = null
-      while (!converged && round < maxRounds) {
-        val prevE = e
-        val prevSup = sup
+      // the state is the surviving edge frame, `(a, b)` before round 1
+      // and `(a, b, support)` after; the round's edge count carries over
+      // to the next stop test
+      var n = 0L
+      val peeled = Iterate(
+          edges
+            .select(least(col(srcCol), col(dstCol)).as("a"),
+              greatest(col(srcCol), col(dstCol)).as("b"))
+            .filter(col("a").isNotNull && col("b").isNotNull &&
+              col("a") =!= col("b"))
+            .distinct(),
+          maxRounds,
+          done = e => { n = e.count(); n == 0 },
+          stop = (sup, _) => {
+            val m = sup.count()
+            val verdict = if (m == n || m == 0) Iterate.Converged else Iterate.Continue
+            n = m
+            verdict
+          }) { (state, _) =>
+        val e = state.select("a", "b")
         val adj = e.select(col("a").as("src"), col("b").as("dst"))
           .union(e.select(col("b").as("src"), col("a").as("dst")))
         val deg = adj.groupBy(col("src").as("node"))
@@ -2047,35 +2053,21 @@ object Graph {
             greatest(col("x"), col("y2")).as("b")))
           .union(closed.select(least(col("y1"), col("y2")).as("a"),
             greatest(col("y1"), col("y2")).as("b")))
-        sup = tri.groupBy("a", "b").agg(count(lit(1)).as("support"))
+        tri.groupBy("a", "b").agg(count(lit(1)).as("support"))
           .filter(col("support") >= k - 2)
-          .localCheckpoint(true)
-        if (prevSup != null) Optimise.releaseCheckpoint(prevSup)
-        Optimise.releaseCheckpoint(prevE)
-        val nextN = sup.count()
-        converged = nextN == n
-        e = sup.select("a", "b")
-        n = nextN
-        round += 1
-        if (n == 0) converged = true
       }
       val result =
-        if (sup == null || n == 0)
-          e.select(col("a").as("src"), col("b").as("dst"))
+        if (n == 0)
+          peeled.state.select(col("a").as("src"), col("b").as("dst"))
             .withColumn("support", lit(0L)).filter(lit(false))
-        else sup.select(col("a").as("src"), col("b").as("dst"),
+        else peeled.state.select(col("a").as("src"), col("b").as("dst"),
           col("support"))
-      (result, converged)
+      (result, peeled.converged)
     }
     run.flatMap { case (result, converged) =>
-      if (converged) graft.functional.Ok(result)
-      else {
-        val err = new IllegalStateException(
-          s"kTruss: support peeling did not stabilize within $maxRounds " +
-            "rounds; the returned edge set is still shrinking — raise maxRounds")
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(err.getMessage)
-        graft.functional.IgnorableFail(err, result)
-      }
+      Iterate.settle(converged, result)(
+        s"kTruss: support peeling did not stabilize within $maxRounds " +
+          "rounds; the returned edge set is still shrinking — raise maxRounds")
     }
   }
 
