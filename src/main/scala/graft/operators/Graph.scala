@@ -1248,15 +1248,10 @@ object Graph {
   ): MayFail[DataFrame] =
     ccStarRun(edges, srcCol, dstCol, maxRounds, seed).flatMap {
       case (labels, converged, _) =>
-        if (converged) graft.functional.Ok(labels)
-        else {
-          val err = new IllegalStateException(
-            s"connectedComponentsStar: star contraction did not reach a " +
-              s"fixed point within $maxRounds rounds — raise maxRounds " +
-              "(O(log n) suffices for any diameter)")
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(err.getMessage)
-          graft.functional.IgnorableFail(err, labels)
-        }
+        Iterate.settle(converged, labels)(
+          s"connectedComponentsStar: star contraction did not reach a " +
+            s"fixed point within $maxRounds rounds — raise maxRounds " +
+            "(O(log n) suffices for any diameter)")
     }
 
   /** [[connectedComponentsStar]] with the contraction-round count
@@ -1290,16 +1285,20 @@ object Graph {
       val seedPairs = seed.map(_.select(
         least(col("node"), col("component")).as("a"),
         greatest(col("node"), col("component")).as("b")))
-      var p = seedPairs.fold(basePairs)(basePairs.unionByName(_))
-        .filter(col("a").isNotNull && col("b").isNotNull &&
-          col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint(true)
-      var converged = p.limit(1).count() == 0 // empty graph: trivially done
-      var round = 0
-      while (!converged && round < maxRounds) {
-        round += 1
-        val prev = p
+      val out = Iterate(
+          seedPairs.fold(basePairs)(basePairs.unionByName(_))
+            .filter(col("a").isNotNull && col("b").isNotNull &&
+              col("a") =!= col("b"))
+            .distinct(),
+          maxRounds,
+          done = _.limit(1).count() == 0, // empty graph: trivially done
+          // fixed point ⟺ same pair set (both sides distinct): equal
+          // counts + empty difference
+          stop = (p2, prev) =>
+            if (p2.count() == prev.count() &&
+                p2.join(prev, Seq("a", "b"), "left_anti").limit(1).count() == 0)
+              Iterate.Converged
+            else Iterate.Continue) { (p, round) =>
         // large-star: m(u) = min(Γ(u) ∪ {u}) = least(min v, u); every
         // LARGER neighbor v > u re-points at m — one output pair per
         // input pair (the v > u side of exactly one orientation)
@@ -1307,34 +1306,26 @@ object Graph {
           .union(p.select(col("b").as("u"), col("a").as("v")))
         val mLarge = nbrs.groupBy("u")
           .agg(least(min(col("v")), first(col("u"))).as("m"))
-        val p1 = nbrs.join(mLarge, Seq("u"))
+        val p1 = round.materialise(nbrs.join(mLarge, Seq("u"))
           .filter(col("v") > col("u"))
           .select(col("m").as("a"), col("v").as("b")) // m ≤ u < v
-          .distinct()
-          .localCheckpoint(true)
+          .distinct())
         // small-star: key every pair at its larger endpoint; u and all
         // smaller neighbors contract onto m = min(Γ⁻(u) ∪ {u}) = min v
         val byMax = p1.select(col("b").as("u"), col("a").as("v"))
         val mSmall = byMax.groupBy("u").agg(min(col("v")).as("m"))
-        val p2 = byMax.join(mSmall, Seq("u"))
+        byMax.join(mSmall, Seq("u"))
           .filter(col("v") =!= col("m"))
           .select(col("m").as("a"), col("v").as("b"))
           .unionByName(mSmall.select(col("m").as("a"), col("u").as("b")))
           .distinct()
-          .localCheckpoint(true)
-        Optimise.releaseCheckpoint(p1)
-        // fixed point ⟺ same pair set (both sides distinct): equal
-        // counts + empty difference
-        converged = p2.count() == prev.count() &&
-          p2.join(prev, Seq("a", "b"), "left_anti").limit(1).count() == 0
-        p = p2
-        Optimise.releaseCheckpoint(prev)
       }
       // at the fixed point every pair is (component-min, member)
+      val p = out.state
       val labels = p.select(col("b").as("node"), col("a").as("component"))
         .unionByName(p.select(col("a").as("node"), col("a").as("component")))
         .distinct()
-      (labels, converged, round)
+      (labels, out.converged, out.rounds)
     }
     run
   }
