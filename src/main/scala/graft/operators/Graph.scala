@@ -1373,16 +1373,17 @@ object Graph {
       .union(und.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("dst"))
       .persist()
-    var labeled = seeds
-      .select(col(nodeCol).as("node"), col(labelCol).cast("string").as("label"))
-      .filter(col("node").isNotNull && col("label").isNotNull)
-      .groupBy("node").agg(min(col("label")).as("label"))
-      .withColumn("rounds", lit(0))
-      .localCheckpoint(true)
-    var r = 0
-    var done = labeled.limit(1).count() == 0
-    while (!done && r < maxRounds) {
-      r += 1
+    val labeled = Iterate(
+        seeds
+          .select(col(nodeCol).as("node"), col(labelCol).cast("string").as("label"))
+          .filter(col("node").isNotNull && col("label").isNotNull)
+          .groupBy("node").agg(min(col("label")).as("label"))
+          .withColumn("rounds", lit(0)),
+        maxRounds,
+        done = _.limit(1).count() == 0,
+        stop = (next, prev) =>
+          if (next.count() == prev.count()) Iterate.Converged else Iterate.Continue) {
+        (labeled, round) =>
       val votes = e
         .join(labeled.select(col("node").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src").as("node"), col("label"))
@@ -1394,14 +1395,8 @@ object Graph {
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("node"), col("label"))
-      val prevLabeled = labeled
-      val prevCount = prevLabeled.count()
-      labeled = labeled
-        .unionByName(next.withColumn("rounds", lit(r)))
-        .localCheckpoint(true)
-      done = labeled.count() == prevCount
-      Optimise.releaseCheckpoint(prevLabeled)
-    }
+      labeled.unionByName(next.withColumn("rounds", lit(round.index)))
+    }.state
     e.unpersist()
     labeled
   }
