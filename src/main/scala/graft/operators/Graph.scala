@@ -1610,14 +1610,15 @@ object Graph {
     // seed labels (warm start) apply to the graph's OWN node set: a
     // seeded node keeps its carried community, an unseeded one starts
     // singleton, seed rows for vanished nodes drop in the join
-    var lab = (labIn match {
+    val init = labIn match {
       case Some(l0) => deg.select(col("node"))
         .join(l0.select(col("node"), col("c")), Seq("node"), "left")
         .select(col("node"), coalesce(col("c"), col("node")).as("c"))
       case None => deg.select(col("node"), col("node").as("c"))
-    }).localCheckpoint(true)
-    for (pass <- firstPass until firstPass + passes) {
-      val prevLab = lab
+    }
+    // passes run parities firstPass % 2, (firstPass + 1) % 2, …
+    val lab = Iterate(init, passes) { (lab, round) =>
+      val pass = firstPass + round.index - 1
       // one (node, c, k) frame and the community degree totals
       val nodeInfo = lab.join(deg, Seq("node"))
       val tot = nodeInfo.groupBy("c").agg(sum("k").as("tot"))
@@ -1657,11 +1658,9 @@ object Graph {
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("node"), col("cn"))
-      lab = lab.join(moves, Seq("node"), "left")
+      lab.join(moves, Seq("node"), "left")
         .select(col("node"), coalesce(col("cn"), col("c")).as("c"))
-        .localCheckpoint(true)
-      Optimise.releaseCheckpoint(prevLab)
-    }
+    }.state
     e.unpersist(); if (ownDeg) deg.unpersist()
     lab.select(col("node"), col("c").as("community"))
   }
