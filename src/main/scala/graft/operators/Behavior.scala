@@ -1071,12 +1071,10 @@ object Behavior {
       .withColumn("to", when(col("to") === col("removed"), lit("(null)"))
         .otherwise(col("to")))
       .localCheckpoint(true)
-    var p = redges.select(col("removed"), col("from").as("state"))
-      .distinct()
-      .withColumn("p", lit(0.0))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val next = redges.alias("e")
+    val p = Iterate(redges.select(col("removed"), col("from").as("state"))
+        .distinct()
+        .withColumn("p", lit(0.0)), iterations) { (p, _) =>
+      redges.alias("e")
         .join(p.alias("pk"),
           col("e.removed") === col("pk.removed") &&
             col("e.to") === col("pk.state"), "left")
@@ -1085,10 +1083,7 @@ object Behavior {
             .when(col("e.to") === "(null)", lit(0.0))
             .otherwise(coalesce(col("pk.p"), lit(0.0)))).as("__t"))
         .groupBy("removed", "state").agg(sum(col("__t")).as("p"))
-        .localCheckpoint(true)
-      graft.physical.Optimise.releaseCheckpoint(p)
-      p = next
-    }
+    }.state
     graft.physical.Optimise.releaseCheckpoint(redges)
     val baseP = p.filter(col("removed") === "(none)" &&
         col("state") === "(start)")
