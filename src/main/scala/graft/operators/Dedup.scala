@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functional.MayFail
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
+import graft.physical.Optimise
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -405,48 +406,49 @@ object Dedup {
       val nEdges = edges.count()
       val driverLabels =
         if (nEdges <= maxDriverEdges) driverUnionFind(edges, nEdges) else None
-      val (labels0, converged0) =
-      if (driverLabels.isDefined) (driverLabels.get, true)
-      else {
-      var labels = edges.select(col("src").as("id")).distinct()
-        .withColumn("cluster", col("id"))
-        .localCheckpoint()
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
-        val incoming = edges
-          .join(labels.withColumnRenamed("id", "src"), "src")
-          .groupBy(col("dst").as("id"))
-          .agg(min(col("cluster")).as("__in"))
-        // checkpoint FIRST, then test convergence on the materialized
-        // frame — counting the lazy plan would execute it a second time
-        val next = labels.join(incoming, Seq("id"), "left")
-          .select(col("id"),
-            least(col("cluster"), coalesce(col("__in"), col("cluster"))).as("__next"),
-            col("cluster").as("__prev"))
-          .localCheckpoint()
-        converged = next.filter(col("__next") =!= col("__prev")).limit(1).count() == 0
-        labels = next.select(col("id"), col("__next").as("cluster"))
-        i += 1
+      val (labels0, converged0) = driverLabels match {
+        case Some(labels) => (labels, true)
+        case None =>
+          val out = Iterate(
+              edges.select(col("src").as("id")).distinct()
+                .withColumn("cluster", col("id")),
+              maxIter,
+              // the stop test reads the materialized round — counting the
+              // lazy plan would execute it a second time
+              stop = (next, _) =>
+                if (next.filter(col("__next") =!= col("__prev")).limit(1).count() == 0)
+                  Iterate.Converged
+                else Iterate.Continue,
+              view = _.select(col("id"), col("__next").as("cluster"))) { (labels, _) =>
+            val incoming = edges
+              .join(labels.withColumnRenamed("id", "src"), "src")
+              .groupBy(col("dst").as("id"))
+              .agg(min(col("cluster")).as("__in"))
+            labels.join(incoming, Seq("id"), "left")
+              .select(col("id"),
+                least(col("cluster"), coalesce(col("__in"), col("cluster"))).as("__next"),
+                col("cluster").as("__prev"))
+          }
+          if (out.converged || !starFallback) (out.state, out.converged)
+          else {
+            // WIDE-DIAMETER fallback (default): min-label propagation
+            // advances one hop per round, so a component wider than
+            // `maxIter` hops cannot converge — hand the SAME checkpointed
+            // edge set to the O(log n)-round large-star/small-star
+            // contraction ([[Graph.connectedComponentsStar]]), which labels
+            // every component by its min id EXACTLY, instead of returning
+            // IgnorableFail partials that silently miss duplicates.
+            // `starFallback = false` restores the probe semantics (observe
+            // non-convergence programmatically).
+            Optimise.releaseCheckpoint(out.state)
+            (Graph.connectedComponentsStar(
+                edges.select(col("src"), col("dst")), "src", "dst",
+                maxRounds = math.max(maxIter, 30)).get
+              .select(col("node").as("id"), col("component").as("cluster")), true)
+          }
       }
-      if (!converged && starFallback) {
-        // WIDE-DIAMETER fallback (default): min-label propagation
-        // advances one hop per round, so a component wider than
-        // `maxIter` hops cannot converge — hand the SAME checkpointed
-        // edge set to the O(log n)-round large-star/small-star
-        // contraction ([[Graph.connectedComponentsStar]]), which labels
-        // every component by its min id EXACTLY, instead of returning
-        // IgnorableFail partials that silently miss duplicates.
-        // `starFallback = false` restores the probe semantics (observe
-        // non-convergence programmatically).
-        labels = Graph.connectedComponentsStar(
-            edges.select(col("src"), col("dst")), "src", "dst",
-            maxRounds = math.max(maxIter, 30)).get
-          .select(col("node").as("id"), col("component").as("cluster"))
-        converged = true
-      }
-      (labels, converged)
-      }
+      // every label frame above is materialized apart from the edges
+      Optimise.releaseCheckpoint(edges)
       // SELF-LABELED seed rows (id === cluster) contribute no edge (the
       // idA =!= idB filter above), so an id the seed knows only as its
       // own singleton cluster would vanish from the output — union it
@@ -466,15 +468,10 @@ object Dedup {
       (labelsOut, converged0)
     }
     run.flatMap { case (labels, converged) =>
-      if (converged) graft.functional.Ok(labels)
-      else {
-        val err = new IllegalStateException(
-          s"duplicateClusters: labels did not converge within $maxIter rounds — " +
-            s"components wider than $maxIter hops keep multiple representatives " +
-            "(missed duplicates); raise maxIter")
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(err.getMessage)
-        graft.functional.IgnorableFail(err, labels)
-      }
+      Iterate.settle(converged, labels)(
+        s"duplicateClusters: labels did not converge within $maxIter rounds — " +
+          s"components wider than $maxIter hops keep multiple representatives " +
+          "(missed duplicates); raise maxIter")
     }
   }
 
