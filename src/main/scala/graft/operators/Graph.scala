@@ -779,40 +779,11 @@ object Graph {
       maxDepth: Int = 6
   ): MayFail[DataFrame] = MayFail {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist()
-    var visited = landmarks.select(col(landmarkCol).as("lm")).distinct()
-      .filter(col("lm").isNotNull)
-      .select(col("lm"), col("lm").as("node"), lit(0).as("depth"))
-      .localCheckpoint(true)
-    var frontier = visited.select("lm", "node")
-    var frontierCk: DataFrame = null
-    var d = 0
-    var done = frontier.limit(1).count() == 0
-    while (!done && d < maxDepth) {
-      d += 1
-      val next = e.join(frontier.withColumnRenamed("node", "src"),
-          Seq("src"))
-        .select(col("lm"), col("dst").as("node")).distinct()
-        .join(visited, Seq("lm", "node"), "left_anti")
-        .withColumn("depth", lit(d))
-        .localCheckpoint(true)
-      done = next.limit(1).count() == 0
-      if (!done) {
-        val prev = visited
-        visited = visited.union(next).localCheckpoint(true)
-        Optimise.releaseCheckpoint(prev)
-        if (frontierCk != null) Optimise.releaseCheckpoint(frontierCk)
-        frontierCk = next
-        frontier = next.select("lm", "node")
-      } else {
-        Optimise.releaseCheckpoint(next)
-      }
-    }
-    e.unpersist()
-    if (frontierCk != null) Optimise.releaseCheckpoint(frontierCk)
+    val visited = frontierDepths(edges, srcCol, dstCol,
+      landmarks.select(col(landmarkCol).as("lm")).distinct()
+        .filter(col("lm").isNotNull)
+        .select(col("lm"), col("lm").as("node")),
+      Seq("lm"), maxDepth)
     val out = visited.filter(col("depth") > 0)
       .groupBy("node")
       .agg(count(lit(1)).as("n_landmarks"),
@@ -845,43 +816,75 @@ object Graph {
       maxDepth: Int = 10
   ): MayFail[DataFrame] = MayFail {
     require(maxDepth >= 0, s"maxDepth must be >= 0: $maxDepth")
+    frontierDepths(edges, srcCol, dstCol,
+      seeds.select(col(seedCol).as("node")).distinct()
+        .filter(col("node").isNotNull),
+      Nil, maxDepth)
+  }
+
+  /** The frontier loop behind [[bfsDepths]], [[harmonicCloseness]] and
+    * [[harmonicCentrality]]: from `seeds` `(keys…, node)` at depth 0,
+    * expand along the distinct directed edges one hop per level, up to
+    * `maxDepth`, each `(keys…, node)` entering once at its first depth.
+    * Returns the visited `(keys…, node, depth: int)` frame,
+    * checkpointed.
+    *
+    * Per level: one join from the (materialized, slim) frontier into
+    * the persisted edge list — a semi-join when there are no keys, an
+    * inner join carrying them otherwise — a distinct, and an anti-join
+    * against the visited set; stops early when a frontier empties. Each
+    * level materializes two frames, the new frontier (its emptiness ends
+    * the loop before the union is built) and the visited union, so the
+    * loop stays outside [[Iterate]], which keeps one state per round;
+    * each superseded frame is released once its successor is
+    * materialized.
+    */
+  private def frontierDepths(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      seeds: DataFrame,
+      keys: Seq[String],
+      maxDepth: Int
+  ): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .persist()
-    var depths = seeds.select(col(seedCol).as("node")).distinct()
-      .filter(col("node").isNotNull)
-      .withColumn("depth", lit(0))
-      .localCheckpoint(true)
-    var frontier = depths.select("node")
+    val keyed = keys :+ "node"
+    var visited = seeds.withColumn("depth", lit(0)).localCheckpoint(true)
+    var frontier = visited.select(keyed.map(col): _*)
     var frontierCk: DataFrame = null // the checkpoint backing `frontier`
     var d = 0
     var done = frontier.limit(1).count() == 0
     while (!done && d < maxDepth) {
       d += 1
-      val next = e.join(frontier.withColumnRenamed("node", "src"),
-          Seq("src"), "left_semi")
-        .select(col("dst").as("node")).distinct()
-        .join(depths, Seq("node"), "left_anti")
+      val from = frontier.withColumnRenamed("node", "src")
+      val reached =
+        if (keys.isEmpty) e.join(from, Seq("src"), "left_semi")
+        else e.join(from, Seq("src"))
+      val next = reached.select(keys.map(col) :+ col("dst").as("node"): _*)
+        .distinct()
+        .join(visited, keyed, "left_anti")
         .withColumn("depth", lit(d))
         .localCheckpoint(true)
       done = next.limit(1).count() == 0
       if (!done) {
-        val prevDepths = depths
-        depths = depths.union(next).localCheckpoint(true)
-        // union checkpoint materialized: the previous depths frame and
-        // the frontier two rounds back are both superseded
-        Optimise.releaseCheckpoint(prevDepths)
+        val prevVisited = visited
+        visited = visited.union(next).localCheckpoint(true)
+        // union checkpoint materialized: the previous visited frame and
+        // the frontier two levels back are both superseded
+        Optimise.releaseCheckpoint(prevVisited)
         if (frontierCk != null) Optimise.releaseCheckpoint(frontierCk)
         frontierCk = next
-        frontier = next.select("node")
+        frontier = next.select(keyed.map(col): _*)
       } else {
         Optimise.releaseCheckpoint(next)
       }
     }
     e.unpersist()
     if (frontierCk != null) Optimise.releaseCheckpoint(frontierCk)
-    depths
+    visited
   }
 
   /** Per-community conductance of a given labeling — the cut-quality
@@ -1155,41 +1158,11 @@ object Graph {
       s"maxDepth must be in 1..20: $maxDepth")
     val lcm = (1 to maxDepth).foldLeft(1L)((a, b) =>
       a / BigInt(a).gcd(BigInt(b)).toLong * b)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist()
-    var depths = landmarks.select(col(nodeCol).as("landmark")).distinct()
-      .filter(col("landmark").isNotNull)
-      .select(col("landmark"), col("landmark").as("node"),
-        lit(0).as("depth"))
-      .localCheckpoint(true)
-    var frontier = depths.select("landmark", "node")
-    var frontierCk: DataFrame = null
-    var d = 0
-    var done = frontier.limit(1).count() == 0
-    while (!done && d < maxDepth) {
-      d += 1
-      val next = e.join(frontier.withColumnRenamed("node", "src"),
-          Seq("src"))
-        .select(col("landmark"), col("dst").as("node")).distinct()
-        .join(depths, Seq("landmark", "node"), "left_anti")
-        .withColumn("depth", lit(d))
-        .localCheckpoint(true)
-      done = next.limit(1).count() == 0
-      if (!done) {
-        val prevDepths = depths
-        depths = depths.union(next).localCheckpoint(true)
-        Optimise.releaseCheckpoint(prevDepths)
-        if (frontierCk != null) Optimise.releaseCheckpoint(frontierCk)
-        frontierCk = next
-        frontier = next.select("landmark", "node")
-      } else {
-        Optimise.releaseCheckpoint(next)
-      }
-    }
-    e.unpersist()
-    if (frontierCk != null) Optimise.releaseCheckpoint(frontierCk)
+    val depths = frontierDepths(edges, srcCol, dstCol,
+      landmarks.select(col(nodeCol).as("landmark")).distinct()
+        .filter(col("landmark").isNotNull)
+        .select(col("landmark"), col("landmark").as("node")),
+      Seq("landmark"), maxDepth)
     depths.filter(col("depth") > 0)
       .groupBy("node")
       .agg(count(lit(1)).as("n_reached"),
