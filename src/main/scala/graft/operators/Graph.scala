@@ -1346,6 +1346,8 @@ object Graph {
       .union(und.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("dst"))
       .persist()
+    // the labeled count carries from one round's stop test to the next
+    var n = 0L
     val labeled = Iterate(
         seeds
           .select(col(nodeCol).as("node"), col(labelCol).cast("string").as("label"))
@@ -1353,10 +1355,13 @@ object Graph {
           .groupBy("node").agg(min(col("label")).as("label"))
           .withColumn("rounds", lit(0)),
         maxRounds,
-        done = _.limit(1).count() == 0,
-        stop = (next, prev) =>
-          if (next.count() == prev.count()) Iterate.Converged else Iterate.Continue) {
-        (labeled, round) =>
+        done = seeded => { n = seeded.count(); n == 0 },
+        stop = (next, _) => {
+          val m = next.count()
+          val verdict = if (m == n) Iterate.Converged else Iterate.Continue
+          n = m
+          verdict
+        }) { (labeled, round) =>
       val votes = e
         .join(labeled.select(col("node").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src").as("node"), col("label"))

@@ -47,7 +47,7 @@ class GraphLoopSpec extends AnyFunSuite {
       Graph.connectedComponentsStar(edges, "s", "d").get),
     ("connectedComponents(maxDriverEdges = 0)", 91, () =>
       Graph.connectedComponents(edges, "s", "d", maxIter = 20, maxDriverEdges = 0L).get),
-    ("labelPropagate", 66, () =>
+    ("labelPropagate", 54, () =>
       Graph.labelPropagate(edges, "s", "d", labels, "n", "label", maxRounds = 8).get),
     ("louvainMove", 63, () => Graph.louvainMove(edges, "s", "d", passes = 4).get),
     ("markovAttribution", 40, () => Behavior.markovAttribution(events,
