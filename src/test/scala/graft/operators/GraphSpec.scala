@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.graftbridge.RddBlocks
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{lit, timestamp_seconds}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkTestBase
 
@@ -775,6 +779,40 @@ class GraphSpec extends AnyFunSuite {
       assert(pinned() <= before + 1, "kCore must pin only its result")
       graft.physical.Optimise.releaseCheckpoint(kc)
       assert(pinned() <= before)
+
+      // counted as the block manager's RDD blocks: getPersistentRDDs is
+      // weak-valued and misses a collected RDD whose blocks are still
+      // stored. releaseCheckpoint does not block, hence `eventually`
+      val path = (0L until 29L).map(i => (i, i + 1)).toDF("s", "d")
+      val lm = Seq(1L, 4L).toDF("n")
+      val events = Seq((1L, 1L, 10L, "A"), (2L, 1L, 20L, "conv"),
+          (3L, 2L, 10L, "B"), (4L, 3L, 10L, "A"), (5L, 3L, 20L, "B"))
+        .toDF("event_id", "user_id", "epoch", "t")
+        .withColumn("ts", timestamp_seconds($"epoch"))
+      val released: Seq[(String, () => DataFrame)] = Seq(
+        "connectedComponents" -> (() => Graph.connectedComponents(path, "s", "d",
+          maxIter = 40, maxDriverEdges = 0L).get),
+        "connectedComponentsStar" -> (() =>
+          Graph.connectedComponentsStar(path, "s", "d").get),
+        "labelPropagate" -> (() => Graph.labelPropagate(e, "s", "d",
+          Seq((1L, "x")).toDF("n", "label"), "n", "label").get),
+        "coreNumber" -> (() => Graph.coreNumber(e, "s", "d").get),
+        "kTruss" -> (() => Graph.kTruss(e, "s", "d", k = 3).get),
+        "harmonicCloseness" -> (() =>
+          Graph.harmonicCloseness(e, "s", "d", lm, "n").get),
+        "harmonicCentrality" -> (() =>
+          Graph.harmonicCentrality(e, "s", "d", lm, "n").get),
+        "markovAttribution" -> (() => Behavior.markovAttribution(events,
+          "ts", "event_id", "user_id", "t", "conv", iterations = 6).get))
+      for ((name, call) <- released) {
+        val blocks = RddBlocks(spark)
+        val out = call()
+        out.count()
+        graft.physical.Optimise.releaseCheckpoint(out)
+        eventually(timeout(20.seconds)) {
+          assert(RddBlocks(spark) <= blocks, s"$name must pin only its result")
+        }
+      }
     }
   }
 
@@ -798,6 +836,27 @@ class GraphSpec extends AnyFunSuite {
         "src", "dst", k = 2L).get
       .select("node").as[Long].collect().toSet
     assert(got.filter(_._2 >= 2L).keySet == core2)
+  }
+
+  // a triangle with a 4-hop tail: peeling drops one tail node per round
+  private def tailedTriangle = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+    (4L, 5L), (5L, 6L), (6L, 7L)).toDF("s", "d")
+
+  test("kCore: too few rounds is IgnorableFail carrying the shrinking partial") {
+    val e = tailedTriangle
+    val r = Graph.kCore(e.union(e.select($"d", $"s")), "s", "d", k = 2,
+      maxRounds = 1)
+    assert(r.isInstanceOf[graft.functional.IgnorableFail[_]])
+    assert(r.getError.get.getMessage.contains("kCore"))
+    // round 1 peels node 7 only
+    assert(r.get.count() == 6L)
+  }
+
+  test("coreNumber: too few rounds is IgnorableFail carrying the partial") {
+    val r = Graph.coreNumber(tailedTriangle, "s", "d", maxRounds = 1)
+    assert(r.isInstanceOf[graft.functional.IgnorableFail[_]])
+    assert(r.getError.get.getMessage.contains("coreNumber"))
+    assert(r.get.count() == 7L)
   }
 
   test("kTruss: K4 survives at k=4, pendant triangle peels, cascade empties") {
