@@ -1686,32 +1686,17 @@ object Graph {
     * `(node, community)` labeling (new nodes start singleton); the
     * acceptance baseline is then the SEED partition's numerator, so the
     * result never regresses below the carried-over communities — if
-    * every level is rejected the seed labeling itself is returned.
-    *
-    * `phaseSink` (instrumentation, r12 verdict ask #3): when non-null,
-    * receives `(phase, seconds)` wall-times at each materialization
-    * boundary — `setup`, then `L{n}-moves` / `L{n}-contract` /
-    * `L{n}-compose` per level (every frame is eagerly
-    * localCheckpoint'd, so the boundaries are real barriers). Used by
-    * [[graft.tools.LouvainProbe]]'s `full` mode to localize q319
-    * drift; no effect on the plan. */
+    * every level is rejected the seed labeling itself is returned. */
   def louvain(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       passes: Int = 4,
       levels: Int = 2,
-      seed: Option[DataFrame] = None,
-      phaseSink: (String, Double) => Unit = null
+      seed: Option[DataFrame] = None
   ): MayFail[DataFrame] = MayFail {
     require(passes >= 1, s"passes must be >= 1: $passes")
     require(levels >= 1 && levels <= 10, s"levels must be in 1..10: $levels")
-    var tPhase = System.nanoTime()
-    def tick(phase: String): Unit = if (phaseSink != null) {
-      val now = System.nanoTime()
-      phaseSink(phase, (now - tPhase) / 1e9)
-      tPhase = now
-    }
     var und = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -1773,13 +1758,11 @@ object Graph {
         .localCheckpoint(true)).orNull
     var level = 1
     var stalled = false
-    tick("setup")
     while (level <= levels && !stalled) {
       val lab = louvainPasses(und, selfW, passes, degIn = Some(deg),
           labIn = if (level == 1) seedLab else None)
         .select(col("node"), col("community").as("c"))
         .localCheckpoint(true)
-      tick(s"L$level-moves")
       // contract FIRST — the contraction's aggregates ARE the acceptance
       // numerator's terms (VERDICT r10 #2: no separate full-edge-list
       // numerator join per level): Σ sw' = within-community cross weight
@@ -1813,7 +1796,6 @@ object Graph {
           .agg(coalesce(sum(col("k") * col("k")), lit(0L)).as("__dsq")))
         .first()
       val nNew = 4L * m * r.getLong(0) - r.getLong(1)
-      tick(s"L$level-contract")
       if (nNew <= nPrev) {
         // the level's simultaneous moves net no improvement (or
         // interfere destructively): revert and stop — modularity is
@@ -1848,7 +1830,6 @@ object Graph {
         selfW = selfWNext
         deg = degNext
         Optimise.releaseCheckpoint(lab)
-        tick(s"L$level-compose")
       }
       level += 1
     }

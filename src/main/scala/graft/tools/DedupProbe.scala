@@ -3,8 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 /** q65 watch phase split (r13 verdict ask #5): time the
-  * `minhashDedupTransitive` chain's phases separately, min-of-N, the
-  * way LouvainProbe did for q319 —
+  * `minhashDedupTransitive` chain's phases separately, min-of-N —
   *
   *  1. `pairs`    — the MinHash-LSH pair pipeline (shingle, band,
   *                  candidate join, exact-Jaccard verify) to a count.
