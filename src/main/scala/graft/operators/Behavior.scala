@@ -1020,8 +1020,8 @@ object Behavior {
     * one partial-agg shuffle on the edge; the removal-replicated edge
     * frame is `localCheckpoint`ed ONCE (size ≤ (C+1)·E for C channels
     * and E ≤ (C+2)² edges — channel cardinality, never rows) and each
-    * step joins and aggregates on the composite key with the
-    * checkpoint-release discipline of [[Graph.pageRank]]. Counts and
+    * step, one round of an [[Iterate]] loop, joins and aggregates on
+    * the composite key. Counts and
     * probabilities exact rationals; the fixed-point sums are χ²-tier
     * floats.
     */

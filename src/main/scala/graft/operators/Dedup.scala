@@ -335,8 +335,8 @@ object Dedup {
     * label among itself and its neighbors; a chain A~B~C converges to A
     * even when the A~C pair was never generated).
     *
-    * Each iteration is one join + one aggregate; lineage is cut with
-    * `localCheckpoint` per round so the plan does not grow exponentially.
+    * Each iteration is one join + one aggregate, one round of an
+    * [[Iterate]] loop, so the plan does not grow exponentially.
     * Label-propagation rounds needed = graph diameter — near-dup graphs
     * are shallow (dup clusters are cliques or short chains), so `maxIter`
     * of 10 covers them; the loop exits early on convergence.

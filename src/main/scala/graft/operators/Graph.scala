@@ -54,12 +54,10 @@ object Graph {
     * a left join back onto the node set. The dangling term is a 1-row
     * aggregate per iteration — the standard driver-side scalar every
     * distributed PageRank (including GraphX's) pays. The rank frame is
-    * MATERIALIZED (`localCheckpoint`) every iteration: it is consumed
-    * three times per round (dangling scalar, contribution join,
-    * join-back), so a lazy frame would re-execute its whole lineage
-    * ~3× per round — exponential in the iteration count. Materializing
-    * a slim (node, rank) frame per round is the linear-cost shape; it
-    * also keeps the plan depth constant for deep iteration counts. All
+    * the state of an [[Iterate]] loop, materialized every iteration: it
+    * is consumed three times per round (dangling scalar, contribution
+    * join, join-back), so a lazy frame would re-execute its whole
+    * lineage ~3× per round — exponential in the iteration count. All
     * persisted frames are released before returning (the library's
     * unpersist discipline).
     *
@@ -430,11 +428,10 @@ object Graph {
     * when no k-core exists.
     *
     * Plan per round: two semi-joins restrict the symmetric edge list to
-    * surviving endpoints, one partial-agg shuffle counts degrees, the
-    * survivor set is materialized (`localCheckpoint` — it is consumed
-    * by both next-round semi-joins AND the convergence count, the same
-    * multi-consumer rule as [[pageRank]]'s rank frame). Peeling is
-    * monotone, so rounds <= the longest peel chain (typically a handful
+    * surviving endpoints, one partial-agg shuffle counts degrees; the
+    * survivor set is the state of an [[Iterate]] loop (it is consumed
+    * by both next-round semi-joins AND the convergence count). Peeling
+    * is monotone, so rounds <= the longest peel chain (typically a handful
     * on real graphs); `maxRounds` only guards pathological chains, and
     * hitting it surfaces as `IgnorableFail` carrying the partial
     * (still-shrinking) survivor set.
@@ -645,10 +642,9 @@ object Graph {
     * paths never use a heavier parallel edge) and the edge frame is
     * persisted across rounds; each round is one join on the frontier
     * key + a partial-agg min per destination + a full-outer min-merge,
-    * with the per-round `localCheckpoint` + release discipline of
-    * [[pageRank]]. Convergence is detected structurally (no candidate
-    * improves any distance) — one `limit(1).count()` probe per round,
-    * never a collect of the frame.
+    * one round of an [[Iterate]] loop. Convergence is detected
+    * structurally (no candidate improves any distance) — one
+    * `limit(1).count()` probe per round, never a collect of the frame.
     */
   def ssspWeighted(
       edges: DataFrame,
@@ -1019,9 +1015,9 @@ object Graph {
     * partial-agg + anti-join per depth (all keyed by landmark, so k
     * landmarks ride ONE plan, not k jobs); backward, one three-way
     * equi-join per depth in decreasing order. Every level frame is
-    * `localCheckpoint`ed and superseded frames released (the
-    * [[pageRank]] discipline); at most `maxDepth` frames live at once,
-    * each ≤ |landmarks|·|V| rows.
+    * `localCheckpoint`ed, and a superseded visited frame is released
+    * once its successor is materialized; at most `maxDepth` frames live
+    * at once, each ≤ |landmarks|·|V| rows.
     */
   def betweenness(
       edges: DataFrame,
@@ -1211,7 +1207,7 @@ object Graph {
     *
     * Plan per round: two groupBy-min shuffles (one per star phase) +
     * one distinct — all over frames that never exceed the input pair
-    * count + node count; per-round `localCheckpoint` with release. */
+    * count + node count; one [[Iterate]] round per contraction. */
   def connectedComponentsStar(
       edges: DataFrame,
       srcCol: String,
@@ -1324,8 +1320,8 @@ object Graph {
     * (node, label) votes, a hash-partitioned per-node argmax window,
     * and an anti-join against the already-labeled set — each node is
     * labeled exactly once, so total work is O(edges × rounds) worst
-    * case, the [[bfsDepths]] posture. Checkpoints released per the
-    * house discipline.
+    * case, the [[bfsDepths]] posture. The labeled set is the state of
+    * an [[Iterate]] loop.
     */
   def labelPropagate(
       edges: DataFrame,
@@ -1514,8 +1510,7 @@ object Graph {
     * hash-partitioned per-node window that runs the argmax (never
     * single-partition, no second links pass) — one community-total
     * join, one node-info join, and a label update join. The label
-    * frame is checkpointed per pass and the superseded one released
-    * immediately — the [[pageRank]] storage discipline.
+    * frame is the state of an [[Iterate]] loop, one round per pass.
     */
   def louvainMove(
       edges: DataFrame,
@@ -1860,8 +1855,8 @@ object Graph {
     *
     * Per round: one adjacency join of the value frame + a per-node
     * window over each neighborhood (`max(min(rank, value))` — the
-    * H-index as a rank expression), per-round `localCheckpoint` with
-    * release (the pageRank discipline). All-integer, so the result is
+    * H-index as a rank expression), one round of an [[Iterate]] loop.
+    * All-integer, so the result is
     * exact and engine-replayable round-for-round. `maxRounds`
     * exhaustion surfaces as `IgnorableFail` with the still-decreasing
     * partial.
@@ -1928,9 +1923,8 @@ object Graph {
     * per-edge triangle support over the SURVIVING edge set via the
     * same degree-orientation wedge join as [[triangleCount]] (O(m^1.5)
     * wedge bound, no windows, no driver state) and drops edges under
-    * k−2; peeling cascades until a fixed point. Per-round
-    * `localCheckpoint` with release of the superseded frame (the
-    * pageRank discipline); `maxRounds` exhaustion surfaces as
+    * k−2; peeling cascades until a fixed point, one round of an
+    * [[Iterate]] loop per peel; `maxRounds` exhaustion surfaces as
     * `IgnorableFail` carrying the still-shrinking partial.
     *
     * Input edges are undirected (direction and duplicates ignored,
