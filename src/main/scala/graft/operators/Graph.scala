@@ -454,17 +454,10 @@ object Graph {
       val e2 = und.select(col("a").as("src"), col("b").as("dst"))
         .union(und.select(col("b").as("src"), col("a").as("dst")))
         .persist()
-      // the state is the survivor frame `(node, core_degree)`; the
-      // round count of survivors carries over to the next stop test
-      var n = 0L
-      val peeled = Iterate(e2.select(col("src").as("node")).distinct(), maxRounds,
-          done = alive => { n = alive.count(); n == 0 },
-          stop = (deg, _) => {
-            val m = deg.count()
-            val verdict = if (m == n || m == 0) Iterate.Converged else Iterate.Continue
-            n = m
-            verdict
-          }) { (deg, _) =>
+      // the state is the survivor frame, `(node, core_degree)` after
+      // round 1
+      val (peeled, n) = Iterate.untilCountSettles(
+          e2.select(col("src").as("node")).distinct(), maxRounds) { (deg, _) =>
         val alive = deg.select("node")
         e2
           .join(alive.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
@@ -1242,8 +1235,8 @@ object Graph {
       dstCol: String,
       maxRounds: Int,
       seed: Option[DataFrame]
-  ): MayFail[(DataFrame, Boolean, Int)] = {
-    val run = MayFail {
+  ): MayFail[(DataFrame, Boolean, Int)] =
+    MayFail {
       require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
       val basePairs = edges
         .select(least(col(srcCol), col(dstCol)).as("a"),
@@ -1296,8 +1289,6 @@ object Graph {
         .distinct()
       (labels, out.converged, out.rounds)
     }
-    run
-  }
 
   /** Semi-supervised label propagation: spread FIXED seed labels
     * (spam/ham, trusted/banned, topic tags) from a labeled node subset
@@ -1342,22 +1333,14 @@ object Graph {
       .union(und.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("dst"))
       .persist()
-    // the labeled count carries from one round's stop test to the next
-    var n = 0L
-    val labeled = Iterate(
+    // the labeled set only grows: it settles once a round labels no node
+    val (out, _) = Iterate.untilCountSettles(
         seeds
           .select(col(nodeCol).as("node"), col(labelCol).cast("string").as("label"))
           .filter(col("node").isNotNull && col("label").isNotNull)
           .groupBy("node").agg(min(col("label")).as("label"))
           .withColumn("rounds", lit(0)),
-        maxRounds,
-        done = seeded => { n = seeded.count(); n == 0 },
-        stop = (next, _) => {
-          val m = next.count()
-          val verdict = if (m == n) Iterate.Converged else Iterate.Continue
-          n = m
-          verdict
-        }) { (labeled, round) =>
+        maxRounds) { (labeled, round) =>
       val votes = e
         .join(labeled.select(col("node").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src").as("node"), col("label"))
@@ -1370,9 +1353,9 @@ object Graph {
         .filter(col("__rn") === 1)
         .select(col("node"), col("label"))
       labeled.unionByName(next.withColumn("rounds", lit(round.index)))
-    }.state
+    }
     e.unpersist()
-    labeled
+    out.state
   }
 
   /** Link prediction over an undirected graph: for every NON-ADJACENT
@@ -1942,24 +1925,15 @@ object Graph {
       require(k >= 3, s"k must be >= 3: $k")
       require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
       // the state is the surviving edge frame, `(a, b)` before round 1
-      // and `(a, b, support)` after; the round's edge count carries over
-      // to the next stop test
-      var n = 0L
-      val peeled = Iterate(
+      // and `(a, b, support)` after
+      val (peeled, n) = Iterate.untilCountSettles(
           edges
             .select(least(col(srcCol), col(dstCol)).as("a"),
               greatest(col(srcCol), col(dstCol)).as("b"))
             .filter(col("a").isNotNull && col("b").isNotNull &&
               col("a") =!= col("b"))
             .distinct(),
-          maxRounds,
-          done = e => { n = e.count(); n == 0 },
-          stop = (sup, _) => {
-            val m = sup.count()
-            val verdict = if (m == n || m == 0) Iterate.Converged else Iterate.Continue
-            n = m
-            verdict
-          }) { (state, _) =>
+          maxRounds) { (state, _) =>
         val e = state.select("a", "b")
         val adj = e.select(col("a").as("src"), col("b").as("dst"))
           .union(e.select(col("b").as("src"), col("a").as("dst")))

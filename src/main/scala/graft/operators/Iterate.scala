@@ -89,6 +89,24 @@ private[graft] object Iterate {
     Outcome(state, rounds, converged)
   }
 
+  /** [[apply]] with the stop test of the peeling and growing loops: the
+    * loop ends once a round leaves the state's row count unchanged, or
+    * empty, and before round 1 on an empty `init`. Each state is counted
+    * once, and the last count is returned with the outcome. */
+  def untilCountSettles(init: DataFrame, maxRounds: Int)(
+      step: (DataFrame, Round) => DataFrame): (Outcome, Long) = {
+    var n = 0L
+    val out = apply(init, maxRounds,
+      done = state => { n = state.count(); n == 0 },
+      stop = (next, _) => {
+        val m = next.count()
+        val verdict = if (m == n || m == 0) Converged else Continue
+        n = m
+        verdict
+      })(step)
+    (out, n)
+  }
+
   /** The ending of an operator whose loop may hit its cap: `Ok(result)`
     * when it converged; otherwise `message` is logged as a warning and
     * the partial `result` rides in an `IgnorableFail`. */
