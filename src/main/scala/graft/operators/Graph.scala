@@ -142,7 +142,8 @@ object Graph {
     val danglingNodes = nodes.join(outw, Seq("node"), "left_anti")
       .localCheckpoint(true)
     val hasDangling = danglingNodes.limit(1).count() > 0
-    val ranks = Iterate(nodes.withColumn("rank", lit(scale)), iterations) { (ranks, _) =>
+    val init = nodes.withColumn("rank", lit(scale))
+    val ranks = Iterate(init, iterations) { (ranks, _) =>
       val dangling = if (!hasDangling) 0L
       else ranks.join(danglingNodes, Seq("node"), "left_semi")
         .agg(coalesce(sum(expr(s"(rank * $dampNum) div $dampDen")), lit(0L)))
@@ -468,7 +469,8 @@ object Graph {
       }
       val result =
         if (n == 0)
-          peeled.state.select("node").withColumn("core_degree", lit(0L)).filter(lit(false))
+          peeled.state.select("node").withColumn("core_degree", lit(0L))
+            .filter(lit(false))
         else peeled.state
       e2.unpersist()
       (result, peeled.converged)

@@ -110,7 +110,8 @@ private[graft] object Iterate {
   /** The ending of an operator whose loop may hit its cap: `Ok(result)`
     * when it converged; otherwise `message` is logged as a warning and
     * the partial `result` rides in an `IgnorableFail`. */
-  def settle(converged: Boolean, result: DataFrame)(message: => String): MayFail[DataFrame] =
+  def settle(converged: Boolean, result: DataFrame)(
+      message: => String): MayFail[DataFrame] =
     if (converged) Ok(result)
     else {
       val err = new IllegalStateException(message)
