@@ -44,10 +44,10 @@ private[graft] object Iterate {
     * round. Such a frame is checkpointed now and released once the
     * round's new state is materialised. */
   final class Round private[Iterate] (val index: Int) {
-    private[Iterate] var scratch = List.empty[DataFrame]
+    private[Iterate] var held = List.empty[DataFrame]
     def materialise(df: DataFrame): DataFrame = {
       val ck = df.localCheckpoint(true)
-      scratch ::= ck
+      held ::= ck
       ck
     }
   }
@@ -75,7 +75,7 @@ private[graft] object Iterate {
       rounds += 1
       val round = new Round(rounds)
       val next = step(state, round).localCheckpoint(true)
-      round.scratch.foreach(Optimise.releaseCheckpoint)
+      round.held.foreach(Optimise.releaseCheckpoint)
       stop(next, state) match {
         case Unchanged =>
           Optimise.releaseCheckpoint(next)
