@@ -25,7 +25,9 @@ import org.apache.spark.sql.types.StructType
   * stock writers. The output column carries its vector size as ML
   * attribute metadata, so `VectorAssembler` needs no job to learn it.
   *
-  * `TFIDF` method: HashingTF + IDF composition, temp columns dropped.
+  * `TFIDF(minFreq)` method: HashingTF + IDF composition, temp columns
+  * dropped. A term (hash bucket) found in fewer than `minFreq` of the
+  * fitted documents gets weight 0 (the IDF's `minDocFreq`).
   * The IDF statistics live in a nested Spark model, which params cannot
   * carry — persisting a TFIDF-fitted encoder raises a clear error.
   */
@@ -113,10 +115,11 @@ class StringEncoder(
         new StringEncoderModel(uid + "_model").setHashSpace(space)
           .setInputCol($(inputCol)).setOutputCol($(outputCol))
           .setParent(this)
-      case TFIDF(_) =>
+      case TFIDF(minFreq) =>
         val tfCol = $(inputCol) + "___tf"
         val tf = new HashingTF().setInputCol(tokCol).setOutputCol(tfCol)
         val idf = new IDF().setInputCol(tfCol).setOutputCol($(outputCol))
+          .setMinDocFreq(minFreq)
           .fit(tf.transform(tokenised))
         val m = new StringEncoderModel(uid + "_model")
           .setMethodName("tfidf")

@@ -122,6 +122,13 @@ object TextFunctions {
     FunctionBridge.column(
       CharShingleHashes(FunctionBridge.expression(text), n, seed))
 
+  /** The nine counts behind the Gopher quality rules as one struct
+    * (fields in [[GopherImpl.Fields]]), from one native pass over the
+    * text lower-cased by Spark's own `lower`. A null text gives a null
+    * struct. */
+  def gopherCounts(text: Column): Column =
+    FunctionBridge.column(GopherCounts(FunctionBridge.expression(lower(text))))
+
   /** Word n-gram STRINGS (single-space joined), one native pass — the
     * corpus-mining hot path (frequent n-grams); value-identical to the
     * split/slice/array_join formulation without its per-gram interpreted

@@ -1016,6 +1016,124 @@ case class WordShingleHashes(child: Expression, n: Int, seed: Long)
   override def prettyName: String = "word_shingle_hashes"
 }
 
+/** The nine per-document counts behind the Gopher quality rules
+  * (`Quality.gopherFlags`), in one pass over the bytes of a document
+  * that Spark's `Lower` has already lower-cased. Lower-casing neither
+  * makes nor removes a space, `\n`, `#`, `.`, `-`, `*`, `•` or `…`, so
+  * the line and symbol counts equal those of the original text, and the
+  * tokens equal those of `lower(trim(text))`: `trim` strips only spaces,
+  * which separate tokens anyway. The counts replay the column
+  * formulation exactly:
+  *   - tokens: maximal runs outside the five `[ \t\n\r\f]` bytes;
+  *   - token length in characters (UTF-8 lead bytes);
+  *   - `...` counted left to right without overlap, plus each `…`;
+  *   - lines: `split(text, "\n")`, trailing empty lines kept;
+  *   - a bullet line starts, after leading spaces, with `•`, `- ` or
+  *     `* `; an ellipsis line ends, before trailing spaces, with `...`
+  *     or `…`;
+  *   - an alphabetic token holds a byte in `a`–`z`;
+  *   - stop words: how many of the eight occur as a token. */
+object GopherImpl {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+
+  val Fields: Seq[String] = Seq("words", "word_chars", "hashes", "ellipses",
+    "lines", "bullet_lines", "ellipsis_lines", "alpha_words", "stop_words")
+
+  val StopWords: Seq[String] = Seq("the", "be", "to", "of", "and", "that", "have", "with")
+  private val stop = StopWords.map(_.getBytes("UTF-8")).toArray
+
+  @inline private def isWs(b: Byte): Boolean =
+    b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
+
+  // '•' is E2 80 A2 and '…' is E2 80 A6 in UTF-8
+  @inline private def isSeq3(b: Array[Byte], i: Int, last: Int): Boolean =
+    b(i) == 0xe2.toByte && b(i + 1) == 0x80.toByte && b(i + 2) == last.toByte
+  @inline private def isEllipsisChar(b: Array[Byte], i: Int): Boolean = isSeq3(b, i, 0xa6)
+
+  private def stopBit(b: Array[Byte], st: Int, end: Int): Int = {
+    var w = 0
+    while (w < stop.length) {
+      val s = stop(w)
+      if (s.length == end - st) {
+        var j = 0
+        while (j < s.length && s(j) == b(st + j)) j += 1
+        if (j == s.length) return 1 << w
+      }
+      w += 1
+    }
+    0
+  }
+
+  def counts(lowered: UTF8String): InternalRow = {
+    val b = lowered.getBytes
+    val n = b.length
+    var words, chars, alpha = 0L
+    var stops = 0
+    var i = 0
+    while (i < n) {
+      while (i < n && isWs(b(i))) i += 1
+      val st = i
+      var c = 0L
+      var hasAlpha = false
+      while (i < n && !isWs(b(i))) {
+        val x = b(i)
+        if ((x & 0xc0) != 0x80) c += 1
+        if (x >= 'a' && x <= 'z') hasAlpha = true
+        i += 1
+      }
+      if (i > st) {
+        words += 1; chars += c
+        if (hasAlpha) alpha += 1
+        stops |= stopBit(b, st, i)
+      }
+    }
+    var hashes, ellipses, dots = 0L
+    var lines, bullets, ellLines = 0L
+    var ls = 0
+    i = 0
+    while (i <= n) {
+      if (i == n || b(i) == '\n') {
+        ellipses += dots / 3; dots = 0
+        lines += 1
+        var p = ls
+        while (p < i && b(p) == ' ') p += 1
+        if ((p + 3 <= i && isSeq3(b, p, 0xa2)) ||
+            (p + 2 <= i && (b(p) == '-' || b(p) == '*') && b(p + 1) == ' ')) bullets += 1
+        var q = i
+        while (q > ls && b(q - 1) == ' ') q -= 1
+        if (q - ls >= 3 &&
+            ((b(q - 1) == '.' && b(q - 2) == '.' && b(q - 3) == '.') ||
+              isEllipsisChar(b, q - 3))) ellLines += 1
+        ls = i + 1
+      } else {
+        val x = b(i)
+        if (x == '.') dots += 1
+        else {
+          ellipses += dots / 3; dots = 0
+          if (x == '#') hashes += 1
+          else if (i + 3 <= n && isEllipsisChar(b, i)) ellipses += 1
+        }
+      }
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](words, chars, hashes, ellipses, lines,
+      bullets, ellLines, alpha, Integer.bitCount(stops).toLong))
+  }
+}
+
+case class GopherCounts(child: Expression) extends UnaryExpression {
+  override def dataType: DataType =
+    StructType(GopherImpl.Fields.map(StructField(_, LongType, nullable = false)))
+  override def nullSafeEval(input: Any): Any =
+    GopherImpl.counts(input.asInstanceOf[UTF8String])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.GopherImpl.counts($c)")
+  override protected def withNewChildInternal(newChild: Expression): GopherCounts =
+    copy(child = newChild)
+  override def prettyName: String = "gopher_counts"
+}
+
 case class WordNgrams(child: Expression, n: Int, lowercase: Boolean)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)

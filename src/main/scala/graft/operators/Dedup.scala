@@ -132,6 +132,10 @@ object Dedup {
     * `maxBucket` drops pathological buckets (boilerplate/empty docs) before
     * the pair join — the standard guard against quadratic blowup at scale.
     *
+    * `materialize = true` computes each document's shingles and band keys
+    * once and returns an eagerly checkpointed pair list (see below); the
+    * default returns a lazy plan that re-runs them wherever it reads them.
+    *
     * Returns `(idA, idB, jaccard)`.
     */
   def minhashPairs(
@@ -145,27 +149,27 @@ object Dedup {
       maxBucket: Int = 1000,
       materialize: Boolean = false
   ): MayFail[DataFrame] = MayFail {
-    val shRaw = minhashShingled(df, textCol, idCol, shingleSize)
-    // The shingled frame feeds FOUR plan positions (banding agg + probe
-    // under the bucket cap, then the two verification join-backs), so its
-    // kernel re-evaluates up to 4× per run when lazy. `materialize = true`
-    // pins the slim (id, shingle-hashes) frame for ONE evaluation, eagerly
-    // checkpoints the (small) pair list, and releases the pin before
-    // returning — same single-decode contract as the Multimodal pair ops.
-    val sh =
-      if (materialize)
-        shRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shRaw
+    val keyed = minhashKeyed(minhashShingled(df, textCol, idCol, shingleSize),
+      bands, rowsPerBand, keep = Seq("shingles"))
+    // Lazily, the shingle and band-key kernels run once per plan position
+    // that reads them: the bucket-cap count, its join-back, and the two
+    // verification join-backs. `materialize = true` checkpoints the slim
+    // (id, shingles, __keys) frame eagerly, so each kernel runs once per
+    // document; bands and verifies from that checkpoint, checkpoints the
+    // (small) pair list, and releases the keyed frame before returning.
+    val src = if (materialize) keyed.localCheckpoint(true) else keyed
     // Slim banding: only (id, band, bucket) — 24-byte rows — flows through
     // the explode/shuffle/self-join; the shingle-hash arrays are joined
     // back ONLY for surviving candidate pairs. Banding the payload itself
     // would shuffle every document `bands` times.
-    val banded = candidateBands(
-      minhashKeyed(sh, bands, rowsPerBand), maxBucket)
-    val pairs = verifiedPairs(banded, sh.withColumnRenamed("shingles", "__p"),
+    val pairs = verifiedPairs(candidateBands(src, maxBucket),
+      src.select(col("id"), col("shingles").as("__p")),
       "jaccard", jaccardHashes, _ >= threshold, roundDigits = Some(6))
-    if (materialize) { val out = pairs.localCheckpoint(true); sh.unpersist(); out }
-    else pairs
+    if (materialize) {
+      val out = pairs.localCheckpoint(true)
+      Optimise.releaseCheckpoint(src)
+      out
+    } else pairs
   }
 
   /** Shingle HASHES, not shingle strings — minhash and Jaccard only need
@@ -181,15 +185,16 @@ object Dedup {
         wordShingleHashes(col(textCol), shingleSize).as("shingles"))
       .filter(size(col("shingles")) > 0)
 
-  /** `(id, __keys)` banding keys from a [[minhashShingled]] frame — ONE
-    * definition so the pair generators and the cap reports band
-    * identically. */
-  private[graft] def minhashKeyed(sh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    sh.select(col("id"),
-      minhashBandKeysFromHashes(col("shingles"), bands, rowsPerBand).as("__keys"))
+  /** `(id, keep..., __keys)` banding keys from a [[minhashShingled]]
+    * frame — ONE definition so the pair generators and the cap reports
+    * band identically. */
+  private[graft] def minhashKeyed(sh: DataFrame, bands: Int, rowsPerBand: Int,
+      keep: Seq[String] = Nil): DataFrame =
+    sh.select((col("id") +: keep.map(col)) :+
+      minhashBandKeysFromHashes(col("shingles"), bands, rowsPerBand).as("__keys"): _*)
 
   /** Explode per-doc band keys, drop oversized/singleton buckets.
-    * Input: (id, __keys: array<long>); output: (id, band, bucket).
+    * Input: (id, ..., __keys: array<long>); output: (id, band, bucket).
     * The cap is the skew-robust [[Banding.capBuckets]] (partial-agg
     * count + join-back — no single task ever holds a hot bucket).
     *
@@ -197,9 +202,9 @@ object Dedup {
     * size/null pre-filter under the explode, so an expensive key kernel
     * evaluates ~2× per row (codegen CSE merges the filter's two copies).
     * [[graft.functions.BandKeysFromSimhash]] keeps the per-band fan-out
-    * from multiplying that further; pipelines that rescan a corpus many
-    * times should snapshot `(id, sh)` once (Optimise.snapshot) — the same
-    * recommendation as TfIdf postings. */
+    * from multiplying that further; over a checkpointed `__keys` column
+    * (`minhashPairs(materialize = true)`) the kernel does not run here
+    * at all. */
   private def candidateBands(keyed: DataFrame, maxBucket: Int): DataFrame = {
     val banded = keyed
       .select(col("id"), posexplode(col("__keys")).as(Seq("band", "bucket")))
@@ -314,7 +319,9 @@ object Dedup {
 
   /** MinHash-LSH dedup: drop every document that is a near-duplicate of a
     * lower-id document (greedy representative-by-min-id, the standard
-    * corpus-dedup policy). */
+    * corpus-dedup policy). The pairs come from
+    * `minhashPairs(materialize = true)`, so each document's signature is
+    * computed once. */
   def minhashDedup(
       df: DataFrame,
       textCol: String,
@@ -324,7 +331,8 @@ object Dedup {
       rowsPerBand: Int = 4,
       threshold: Double = 0.7
   ): MayFail[DataFrame] =
-    minhashPairs(df, textCol, idCol, shingleSize, bands, rowsPerBand, threshold)
+    minhashPairs(df, textCol, idCol, shingleSize, bands, rowsPerBand, threshold,
+        materialize = true)
       .map { pairs =>
         val toDrop = pairs.select(col("idB").as(idCol)).distinct()
         df.join(toDrop, Seq(idCol), "left_anti")
@@ -543,7 +551,8 @@ object Dedup {
       threshold: Double = 0.7
   ): MayFail[DataFrame] =
     for {
-      pairs <- minhashPairs(df, textCol, idCol, shingleSize, bands, rowsPerBand, threshold)
+      pairs <- minhashPairs(df, textCol, idCol, shingleSize, bands, rowsPerBand, threshold,
+        materialize = true)
       clusters <- duplicateClusters(pairs)
     } yield {
       val drop = clusters.filter(col("id") =!= col("cluster"))
@@ -568,7 +577,8 @@ object Dedup {
       threshold: Double = 0.7
   ): MayFail[DataFrame] =
     for {
-      pairs <- minhashPairs(df, textCol, idCol, shingleSize, bands, rowsPerBand, threshold)
+      pairs <- minhashPairs(df, textCol, idCol, shingleSize, bands, rowsPerBand, threshold,
+        materialize = true)
       clusters <- duplicateClusters(pairs)
     } yield {
       val rn = s"__rn_${java.util.UUID.randomUUID.toString.take(8)}"
@@ -610,7 +620,8 @@ object Dedup {
       threshold: Double = 0.7
   ): MayFail[DataFrame] =
     for {
-      pairs <- minhashPairs(df, textCol, idCol, shingleSize, bands, rowsPerBand, threshold)
+      pairs <- minhashPairs(df, textCol, idCol, shingleSize, bands, rowsPerBand, threshold,
+        materialize = true)
       clusters <- duplicateClusters(pairs)
     } yield {
       require(weights.nonEmpty && weights.forall(_ > 0),

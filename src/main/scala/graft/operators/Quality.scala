@@ -245,8 +245,10 @@ object Quality {
     * words. A word-less (or null-text) document fails every
     * word-denominated rule with `false`, never null.
     *
-    * Scale: pure per-row column expressions — no shuffle, no UDF, fully
-    * codegen'd; filters push down around it. */
+    * Scale: one native codegen'd pass per document
+    * ([[graft.functions.TextFunctions.gopherCounts]]) yields the nine
+    * counts; the flags are column arithmetic on them. No shuffle, no
+    * UDF, no interpreted lambda. */
   def gopherFlags(
       df: DataFrame,
       textCol: String,
@@ -256,45 +258,35 @@ object Quality {
   ): MayFail[DataFrame] = MayFail {
     // null text behaves as empty text so every flag is a real boolean
     // (a NULL pass would vanish from BOTH filter(pass) and filter(!pass))
-    val txt = coalesce(col(textCol), lit(""))
-    val ts = graft.functions.TextFunctions.tokens(txt)
-    val nWords = size(ts).cast("long")
-    val sumLen = aggregate(ts, lit(0L), (a, t) => a + length(t).cast("long"))
-    val meanLen = sumLen.cast("double") / nWords.cast("double")
-    val nHash = (length(txt) -
-      length(regexp_replace(txt, "#", ""))).cast("long")
+    val g = "__gopher"
+    val counted = df.select(col(idCol), graft.functions.TextFunctions.gopherCounts(
+      coalesce(col(textCol), lit(""))).as(g))
+    def n(field: String): Column = col(s"$g.$field")
+    val nWords = n("words")
+    val meanLen = n("word_chars").cast("double") / nWords.cast("double")
     // ONE ellipsis definition shared by the symbol-ratio and line-end
-    // rules: non-overlapping "..." occurrences (removed length is always
-    // a multiple of 3) PLUS Unicode '…' — without the second term a
-    // document full of '…' passes the symbol-ratio rule while still
-    // counting as line-end ellipsis
-    val nEll = ((length(txt) -
-      length(regexp_replace(txt, "\\.\\.\\.", ""))) / 3 +
-      (length(txt) - length(regexp_replace(txt, "…", "")))).cast("long")
-    val lines = split(txt, "\n")
-    val nLines = size(lines).cast("double")
-    val nBullet = size(filter(lines, l =>
-      ltrim(l).startsWith("•") || ltrim(l).startsWith("- ") ||
-        ltrim(l).startsWith("* "))).cast("double")
-    val nEllEnd = size(filter(lines, l =>
-      rtrim(l).endsWith("...") || rtrim(l).endsWith("…"))).cast("double")
-    val nAlpha = size(filter(ts, t => t.rlike("[a-z]"))).cast("long")
-    val stop = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-    val nStop = size(array_intersect(array_distinct(ts),
-      array(stop.map(lit): _*))).cast("long")
+    // rules: non-overlapping "..." occurrences PLUS Unicode '…' — without
+    // the second term a document full of '…' passes the symbol-ratio
+    // rule while still counting as line-end ellipsis
+    val nEll = n("ellipses")
+    val nLines = n("lines").cast("double")
+    // a word-less document fails every word-denominated rule. The guard
+    // is a CASE, not an AND: common-subexpression elimination may hoist
+    // a division repeated under an AND (meanLen) out of its short circuit
+    def perWord(rule: Column): Column = when(nWords > 0, rule).otherwise(false)
     val flags = Seq(
       (nWords >= minWords && nWords <= maxWords).as("word_count_ok"),
-      (nWords > 0 && meanLen.between(3.0, 10.0)).as("mean_word_len_ok"),
-      (nWords > 0 &&
-        nHash.cast("double") / nWords.cast("double") <= 0.1 &&
-        nEll.cast("double") / nWords.cast("double") <= 0.1)
+      perWord(meanLen.between(3.0, 10.0)).as("mean_word_len_ok"),
+      perWord(
+        n("hashes").cast("double") / nWords.cast("double") <= 0.1 &&
+          nEll.cast("double") / nWords.cast("double") <= 0.1)
         .as("symbol_ratio_ok"),
-      (nBullet / nLines <= 0.9).as("bullet_ok"),
-      (nEllEnd / nLines <= 0.3).as("ellipsis_ok"),
-      (nWords > 0 && nAlpha.cast("double") / nWords.cast("double") >= 0.8)
+      (n("bullet_lines").cast("double") / nLines <= 0.9).as("bullet_ok"),
+      (n("ellipsis_lines").cast("double") / nLines <= 0.3).as("ellipsis_ok"),
+      perWord(n("alpha_words").cast("double") / nWords.cast("double") >= 0.8)
         .as("alpha_ok"),
-      (nStop >= 2L).as("stopword_ok"))
-    df.select(col(idCol) +: nWords.as("n_words") +: flags: _*)
+      (n("stop_words") >= 2L).as("stopword_ok"))
+    counted.select(col(idCol) +: nWords.as("n_words") +: flags: _*)
       .withColumn("pass",
         col("word_count_ok") && col("mean_word_len_ok") &&
           col("symbol_ratio_ok") && col("bullet_ok") && col("ellipsis_ok") &&

@@ -64,6 +64,27 @@ class MLSpec extends AnyFunSuite {
     assert(out.columns.toSet == train.columns.toSet + "enc")
   }
 
+  test("StringEncoder TFIDF(minFreq) zeroes terms found in fewer than minFreq documents") {
+    import org.apache.spark.ml.feature.{HashingTF, IDF}
+    import org.apache.spark.ml.linalg.Vector
+    val docs = Seq((0, "a b"), (1, "a c"), (2, "a d")).toDF("i", "s")
+    def enc(m: StringEncoder.Method): Seq[Vector] =
+      new StringEncoder(m).setInputCol("s").setOutputCol("enc").fit(docs)
+        .transform(docs).orderBy("i").collect().map(_.getAs[Vector]("enc")).toSeq
+    // the composition with no document-frequency floor
+    val tokens = docs.withColumn("t", split($"s", "\\s+"))
+    val tf = new HashingTF().setInputCol("t").setOutputCol("tf").transform(tokens)
+    val plain = new IDF().setInputCol("tf").setOutputCol("enc").fit(tf).transform(tf)
+      .orderBy("i").collect().map(_.getAs[Vector]("enc")).toSeq
+    assert(enc(StringEncoder.TFIDF()) == plain)
+    // "a" is in all three documents (idf 0), b, c and d in one each: a
+    // floor of 3 zeroes every weight, a floor of 1 keeps b, c and d
+    val floor3 = enc(StringEncoder.TFIDF(3))
+    assert(floor3 != enc(StringEncoder.TFIDF(1)))
+    assert(floor3.forall(_.numNonzeros == 0))
+    assert(plain.forall(_.numNonzeros == 1))
+  }
+
   test("StringEncoder.copy keeps the method and the vocabulary cap") {
     import org.apache.spark.ml.param.ParamMap
     val tfidf = new StringEncoder(StringEncoder.TFIDF())

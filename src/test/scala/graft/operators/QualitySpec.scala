@@ -188,6 +188,104 @@ class QualitySpec extends AnyFunSuite {
     assert(flag("bullet_ok") && flag("ellipsis_ok")) // no lines misbehave
   }
 
+  /** The column formulation `gopherFlags` used before its native kernel:
+    * the oracle the kernel must match on every column. */
+  private def gopherFlagsOracle(df: org.apache.spark.sql.DataFrame, textCol: String,
+      idCol: String, minWords: Long, maxWords: Long): org.apache.spark.sql.DataFrame = {
+    val txt = coalesce(col(textCol), lit(""))
+    val ts = TextFunctions.tokens(txt)
+    val nWords = size(ts).cast("long")
+    val sumLen = aggregate(ts, lit(0L), (a, t) => a + length(t).cast("long"))
+    val meanLen = sumLen.cast("double") / nWords.cast("double")
+    val nHash = (length(txt) -
+      length(regexp_replace(txt, "#", ""))).cast("long")
+    val nEll = ((length(txt) -
+      length(regexp_replace(txt, "\\.\\.\\.", ""))) / 3 +
+      (length(txt) - length(regexp_replace(txt, "…", "")))).cast("long")
+    val lines = split(txt, "\n")
+    val nLines = size(lines).cast("double")
+    val nBullet = size(filter(lines, l =>
+      ltrim(l).startsWith("•") || ltrim(l).startsWith("- ") ||
+        ltrim(l).startsWith("* "))).cast("double")
+    val nEllEnd = size(filter(lines, l =>
+      rtrim(l).endsWith("...") || rtrim(l).endsWith("…"))).cast("double")
+    val nAlpha = size(filter(ts, t => t.rlike("[a-z]"))).cast("long")
+    val stop = Seq("the", "be", "to", "of", "and", "that", "have", "with")
+    val nStop = size(array_intersect(array_distinct(ts),
+      array(stop.map(lit): _*))).cast("long")
+    val flags = Seq(
+      (nWords >= minWords && nWords <= maxWords).as("word_count_ok"),
+      (nWords > 0 && meanLen.between(3.0, 10.0)).as("mean_word_len_ok"),
+      (nWords > 0 &&
+        nHash.cast("double") / nWords.cast("double") <= 0.1 &&
+        nEll.cast("double") / nWords.cast("double") <= 0.1)
+        .as("symbol_ratio_ok"),
+      (nBullet / nLines <= 0.9).as("bullet_ok"),
+      (nEllEnd / nLines <= 0.3).as("ellipsis_ok"),
+      (nWords > 0 && nAlpha.cast("double") / nWords.cast("double") >= 0.8)
+        .as("alpha_ok"),
+      (nStop >= 2L).as("stopword_ok"))
+    df.select(col(idCol) +: nWords.as("n_words") +: flags: _*)
+      .withColumn("pass",
+        col("word_count_ok") && col("mean_word_len_ok") &&
+          col("symbol_ratio_ok") && col("bullet_ok") && col("ellipsis_ok") &&
+          col("alpha_ok") && col("stopword_ok"))
+  }
+
+  test("gopherFlags: the native kernel equals the column formulation on every column") {
+    val edge = Seq[String](null, "", "   ", "\n\n", "....", "......", "…",
+      "- ", "* ", "•", "   - ", "  * ", "    •", "\t", "\r", "\f",
+      "THE report AND data HAVE merit WITH words TO BE seen",
+      "İstanbul İ ß straße STRASSE ΣΊΣΥΦΟΣ",
+      "a...b....c.....d......\n...\n…\n  ...  \n…  \nx.. .\n- x\n* y\n•z\n-x\n*y",
+      "# ## ###\n#\n\t#tag\r\nthe\fof\tand\rwith", " \n \n ", "a\n")
+    // fragments chosen to hit every rule: separators, symbols, bullets,
+    // stop words in both cases, and non-ASCII letters whose lower-casing
+    // changes their length (İ) or needs context (Σ)
+    val frags = Array("the", "The", "THE", "be", "to", "Of", "and", "that",
+      "have", "with", "WITH", "data", "report", "x", "ab", "123", "9a", "#",
+      "##", ".", "..", "...", "…", "•", "-", "*", "- ", "* ", "• ",
+      " ", "  ", "\t", "\n", "\r", "\f", "\u000b", "İ", "ß", "Σ", "ΣΑΣ",
+      "é", "straße", "日本", "😀", "K")
+    val rnd = new scala.util.Random(7)
+    val generated = (0 until 400).map { _ =>
+      Seq.fill(rnd.nextInt(40))(frags(rnd.nextInt(frags.length))).mkString
+    }
+    val texts = (edge ++ generated).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    // a local relation is folded on the driver (interpreted eval); an
+    // RDD-backed frame runs the generated code. The oracle runs on the
+    // local relation only: executed, it divides by zero on a word-less
+    // document (see the next test)
+    val local = texts.toDF("doc_id", "text")
+    val distributed = spark.sparkContext.parallelize(texts, 3).toDF("doc_id", "text")
+    for ((minWords, maxWords) <- Seq((50L, 100000L), (3L, 20L))) {
+      val want = gopherFlagsOracle(local, "text", "doc_id", minWords, maxWords)
+      val w = want.orderBy("doc_id").collect().toSeq
+      assert(w.length == texts.length)
+      for (docs <- Seq(local, distributed)) {
+        val got = Quality.gopherFlags(docs, "text", "doc_id", minWords, maxWords).get
+        assert(got.schema == want.schema)
+        val g = got.orderBy("doc_id").collect().toSeq
+        assert(g.length == w.length)
+        g.zip(w).foreach { case (a, b) =>
+          assert(a == b, s"doc ${a.getLong(0)}: native $a, columns $b")
+        }
+      }
+    }
+  }
+
+  test("gopherFlags: a word-less document in an executed plan does not divide by zero") {
+    // the AND-guarded mean word length divided by zero words once
+    // common-subexpression elimination hoisted the repeated division
+    val docs = spark.sparkContext.parallelize(Seq((0L, ""), (1L, null), (2L, " \n"),
+      (3L, "the data and report have words to be seen")), 2).toDF("doc_id", "text")
+    val got = Quality.gopherFlags(docs, "text", "doc_id", minWords = 5L).get
+      .orderBy("doc_id").select("n_words", "mean_word_len_ok", "pass")
+      .as[(Long, Boolean, Boolean)].collect().toSeq
+    assert(got == Seq((0L, false, false), (0L, false, false), (0L, false, false),
+      (9L, true, true)))
+  }
+
   test("gopherRepetitionFlags: each repetition rule fires on its designed offender") {
     val cleanLine = "the quick brown fox jumps over the lazy dog near a very calm river today"
     val docs = Seq(
