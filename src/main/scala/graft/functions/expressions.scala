@@ -1026,7 +1026,9 @@ case class WordShingleHashes(child: Expression, n: Int, seed: Long)
   * formulation exactly:
   *   - tokens: maximal runs outside the five `[ \t\n\r\f]` bytes;
   *   - token length in characters (UTF-8 lead bytes);
-  *   - `...` counted left to right without overlap, plus each `…`;
+  *   - `...` counted left to right without overlap, plus each `…` (the
+  *     symbol-ratio and line-end rules share this one definition, so a
+  *     document full of `…` cannot pass one and fail the other);
   *   - lines: `split(text, "\n")`, trailing empty lines kept;
   *   - a bullet line starts, after leading spaces, with `•`, `- ` or
   *     `* `; an ellipsis line ends, before trailing spaces, with `...`
@@ -1040,16 +1042,17 @@ object GopherImpl {
   val Fields: Seq[String] = Seq("words", "word_chars", "hashes", "ellipses",
     "lines", "bullet_lines", "ellipsis_lines", "alpha_words", "stop_words")
 
-  val StopWords: Seq[String] = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-  private val stop = StopWords.map(_.getBytes("UTF-8")).toArray
+  private val stop = Array("the", "be", "to", "of", "and", "that", "have", "with")
+    .map(_.getBytes("UTF-8"))
 
   @inline private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
 
-  // '•' is E2 80 A2 and '…' is E2 80 A6 in UTF-8
-  @inline private def isSeq3(b: Array[Byte], i: Int, last: Int): Boolean =
+  // '•' is E2 80 A2 and '…' is E2 80 A6 in UTF-8; callers check i + 3 <= end
+  @inline private def isE280(b: Array[Byte], i: Int, last: Int): Boolean =
     b(i) == 0xe2.toByte && b(i + 1) == 0x80.toByte && b(i + 2) == last.toByte
-  @inline private def isEllipsisChar(b: Array[Byte], i: Int): Boolean = isSeq3(b, i, 0xa6)
+  @inline private def isBulletChar(b: Array[Byte], i: Int): Boolean = isE280(b, i, 0xa2)
+  @inline private def isEllipsisChar(b: Array[Byte], i: Int): Boolean = isE280(b, i, 0xa6)
 
   private def stopBit(b: Array[Byte], st: Int, end: Int): Int = {
     var w = 0
@@ -1098,7 +1101,7 @@ object GopherImpl {
         lines += 1
         var p = ls
         while (p < i && b(p) == ' ') p += 1
-        if ((p + 3 <= i && isSeq3(b, p, 0xa2)) ||
+        if ((p + 3 <= i && isBulletChar(b, p)) ||
             (p + 2 <= i && (b(p) == '-' || b(p) == '*') && b(p + 1) == ' ')) bullets += 1
         var q = i
         while (q > ls && b(q - 1) == ' ') q -= 1

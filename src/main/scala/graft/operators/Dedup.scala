@@ -133,8 +133,9 @@ object Dedup {
     * the pair join — the standard guard against quadratic blowup at scale.
     *
     * `materialize = true` computes each document's shingles and band keys
-    * once and returns an eagerly checkpointed pair list (see below); the
-    * default returns a lazy plan that re-runs them wherever it reads them.
+    * once, runs eagerly and returns a checkpointed pair list, leaving no
+    * other storage behind; the default returns a lazy plan that re-runs
+    * them wherever it reads them.
     *
     * Returns `(idA, idB, jaccard)`.
     */

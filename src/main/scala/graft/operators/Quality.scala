@@ -264,11 +264,6 @@ object Quality {
     def n(field: String): Column = col(s"$g.$field")
     val nWords = n("words")
     val meanLen = n("word_chars").cast("double") / nWords.cast("double")
-    // ONE ellipsis definition shared by the symbol-ratio and line-end
-    // rules: non-overlapping "..." occurrences PLUS Unicode '…' — without
-    // the second term a document full of '…' passes the symbol-ratio
-    // rule while still counting as line-end ellipsis
-    val nEll = n("ellipses")
     val nLines = n("lines").cast("double")
     // a word-less document fails every word-denominated rule. The guard
     // is a CASE, not an AND: common-subexpression elimination may hoist
@@ -279,7 +274,7 @@ object Quality {
       perWord(meanLen.between(3.0, 10.0)).as("mean_word_len_ok"),
       perWord(
         n("hashes").cast("double") / nWords.cast("double") <= 0.1 &&
-          nEll.cast("double") / nWords.cast("double") <= 0.1)
+          n("ellipses").cast("double") / nWords.cast("double") <= 0.1)
         .as("symbol_ratio_ok"),
       (n("bullet_lines").cast("double") / nLines <= 0.9).as("bullet_ok"),
       (n("ellipsis_lines").cast("double") / nLines <= 0.3).as("ellipsis_ok"),
