@@ -248,7 +248,9 @@ object Quality {
     * Scale: one native codegen'd pass per document
     * ([[graft.functions.TextFunctions.gopherCounts]]) yields the nine
     * counts; the flags are column arithmetic on them. No shuffle, no
-    * UDF, no interpreted lambda. */
+    * UDF, no interpreted lambda. A filter on a flag is pushed below the
+    * counts and runs the kernel once per count reference, so checkpoint
+    * the flags before filtering on them. */
   def gopherFlags(
       df: DataFrame,
       textCol: String,
