@@ -5008,7 +5008,8 @@ object SparkEntry {
     "q234_louvain_bipartite" -> ((s, dir) => {
       // Louvain over the DIRECT part↔supplier graph (non-trivial at
       // every sf, unlike q232's thresholded projection which empties
-      // at sf0.1) — the bench headliner for the iterative label plan.
+      // at sf0.1) — the fingerprinted headliner for the iterative label
+      // plan.
       val li = tbl(s, dir, "lineitem")
       val e = li.select((col("l_partkey") * 2).as("src"),
         (col("l_suppkey") * 2 + 1).as("dst"))
@@ -5019,8 +5020,8 @@ object SparkEntry {
     "q319_louvain_full_bipartite" -> ((s, dir) => {
       // FULL Louvain over the DIRECT part↔supplier graph (non-trivial
       // at every sf — the q234 convention): 2 local passes, contraction,
-      // 2 weighted coarse passes, exact-numerator acceptance. The bench
-      // headliner for the contraction + weighted-pass plan.
+      // 2 weighted coarse passes, exact-numerator acceptance. The
+      // fingerprinted headliner for the contraction + weighted-pass plan.
       val li = tbl(s, dir, "lineitem")
       val e = li.select((col("l_partkey") * 2).as("src"),
         (col("l_suppkey") * 2 + 1).as("dst"))

@@ -1652,7 +1652,7 @@ final class BpeRankIndex(merges: Seq[(String, String)]) extends Serializable {
   *     table as `merges` sequential in-place greedy left-to-right
   *     folds — O(merges × len) per word; retained verbatim as the
   *     executable spec of the fold semantics (KernelPropertySpec's
-  *     law, BpeApplyProbe's A/B baseline).
+  *     law).
   *
   * The two are equivalent for ARBITRARY tables, not only prefix-closed
   * ones: the sequential pass-by-pass execution always performs, next,

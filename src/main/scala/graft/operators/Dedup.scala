@@ -1673,9 +1673,11 @@ object Dedup {
     * `(idCol, n_overlaps)`, overlap counted over DISTINCT corpus-side
     * n-grams. Standard eval-leakage sweep before training.
     *
-    * The benchmark's distinct shingle hashes BROADCAST (eval sets are
-    * small), so the corpus is flagged map-side in one pass — no shuffle
-    * of the 100 TB side; only the per-doc overlap counts aggregate. */
+    * The benchmark's shingle hashes BROADCAST (eval sets are small), so
+    * the corpus is flagged map-side in one pass by a left semi join — no
+    * shuffle of the 100 TB side; only the per-doc overlap counts
+    * aggregate. The semi join keeps each corpus gram at most once, so
+    * grams repeated across benchmark documents need no distinct pass. */
   def contaminationFlags(
       corpus: DataFrame,
       benchmark: DataFrame,
@@ -1688,8 +1690,7 @@ object Dedup {
       explode(array_distinct(wordShingleHashes(col(textCol), n))).as("__sh"))
     val b = benchmark
       .select(explode(array_distinct(wordShingleHashes(col(textCol), n))).as("__sh"))
-      .distinct()
-    c.join(broadcast(b), Seq("__sh"))
+    c.join(broadcast(b), Seq("__sh"), "left_semi")
       .groupBy("id")
       .agg(count(lit(1)).as("n_overlaps"))
       .select(col("id").as(idCol), col("n_overlaps"))

@@ -23,6 +23,86 @@ import org.apache.spark.sql.DataFrame
   * can assert string equality against the committed table. */
 object PlanFingerprint {
 
+  /** The gate queries whose plan skeletons PlanFingerprintSpec locks:
+    * one per plan shape whose cost at scale hangs on a strategy choice
+    * the optimizer can flip silently (a broadcast turning into a
+    * shuffle, a window family or exchange appearing or disappearing). */
+  val headline: Seq[String] = Seq(
+    // the relational basics: wide partial aggregation, shuffle join,
+    // broadcast join and running window
+    "q01_agg",
+    "q12_join_inner",
+    "q15_join_broadcast",
+    "q20_window_running",
+    // exact dedup's window-group-limit, the MinHash and embedding LSH
+    // band joins and brute-force k-NN's nested loop: a lost broadcast
+    // here turns into a quadratic shuffle
+    "q33_dedup_exact",
+    "q34_dedup_minhash",
+    "q37_dedup_embedding",
+    "q38_knn_brute",
+    // event-time window, and the as-of join's three window families
+    "q42_event_window",
+    "q52_asof_join",
+    // TPC-H Q3 and Q5: every dimension join must stay broadcast (the
+    // spec also locks their final adaptive plans at sf0.1)
+    "q54_tpch3",
+    "q55_tpch5",
+    // transitive dedup (iterative connected components), the sparse
+    // TF-IDF pair join and TPC-H Q10's 3-way join
+    "q65_dedup_transitive",
+    "q76_tfidf",
+    "q86_tpch10",
+    // paragraph dedup (explode, window, ordered reassembly) and the
+    // n-gram LM (two count tables joined back to the token stream)
+    "q94_paragraph_dedup",
+    "q96_lm_score",
+    // span dedup: the positional gram shuffle and its rebuild join
+    "q102_span_dedup",
+    // codebook-cell quadratic pairing and the broadcast-scored
+    // two-corpus gram stream
+    "q113_semantic_dedup",
+    "q114_dsir",
+    // the 9-gram-order tagged explode, and the per-row codec and FFT
+    // pipeline (a mapPartitions kernel that must stay one exchange deep)
+    "q126_gopher_repetition",
+    "q124_audio_spectrum",
+    // corpus-wide trigram mining: the widest explode, through one
+    // partial-aggregate shuffle into a top-k
+    "q143_frequent_ngrams",
+    // the deepest TPC-H join trees: Q9's 5-way fan-out and Q21's
+    // decorrelated EXISTS/NOT EXISTS, where join-order and
+    // broadcast-threshold drift shows first
+    "q171_tpch9",
+    "q173_tpch21",
+    // the PQ scan with lookup tables and exhaustive rerank, and MMR over
+    // window-group-limit-capped shortlists
+    "q182_pq_knn",
+    "q179_mmr_select",
+    // PageRank (the returned plan starts at the last per-round
+    // checkpoint) and the bipartite co-occurrence self-join
+    "q195_pagerank",
+    "q196_bipartite_projection",
+    // Louvain local moves, and STL-lite's two window families and phase
+    // aggregate over a gap-filled grid
+    "q234_louvain_bipartite",
+    "q233_seasonal",
+    // the absorbing-chain solve, weighted SSSP and the 5-gram
+    // decontamination screen (two gram explosions and a gram-keyed join)
+    "q248_markov_attribution",
+    "q251_sssp_weighted",
+    "q252_contamination",
+    // blocked Jaro-Winkler linkage and the per-key Theil-Sen and
+    // Mann-Kendall pair self-joins: quadratic within a key or block
+    "q261_record_linkage",
+    "q268_theil_sen",
+    "q289_mann_kendall",
+    // TextRank's explode-then-iterate composition, and full Louvain's
+    // community contraction and coarse passes
+    "q293_textrank",
+    "q319_louvain_full_bipartite"
+  )
+
   private val nodeHeader = """(?m)^\s*\((\d+)\)\s+([A-Za-z]+)""".r
 
   def of(df: DataFrame): String = {
@@ -93,7 +173,7 @@ object FingerprintProbe {
     val spark = graft.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
-    val names = if (args.nonEmpty) args.toSeq else graft.Bench.headline
+    val names = if (args.nonEmpty) args.toSeq else PlanFingerprint.headline
     names.foreach { q =>
       val fp = PlanFingerprint.of(graft.SparkEntry.queries(q)(spark, dir))
       println(s"""    "$q" ->\n      "$fp",""")

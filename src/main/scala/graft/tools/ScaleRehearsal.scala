@@ -13,6 +13,75 @@ import org.apache.spark.sql.functions._
   * `assert` (a violated one aborts the run AND leaves `"aborted"` in the
   * artifact). */
 object ScaleRehearsal {
+
+  // Fixed-work host-state calibrations. The work never changes between
+  // rehearsals, so the seconds measure the host: divide two rehearsals'
+  // timings by the matching calibration ratio before calling a delta a
+  // regression.
+
+  /** The fastest of `runs` timed runs of `work`, after one untimed run
+    * when `warmup` (codegen, JIT, first file creation). */
+  private def minSeconds(runs: Int, warmup: Boolean)(work: => Unit): Double = {
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      work
+      (System.nanoTime() - t0) / 1e9
+    }
+    if (warmup) once()
+    (0 until math.max(1, runs)).map(_ => once()).min
+  }
+
+  /** Single-thread CPU: a constant splitmix64 fold, no allocation, no
+    * Spark. */
+  private def cpuCalibration(runs: Int): Double = {
+    var sink = 0L
+    val sec = minSeconds(runs, warmup = false) {
+      var acc = 0L
+      var i = 0L
+      while (i < 200000000L) { acc ^= graft.functions.VecOps.splitmix64(i); i += 1 }
+      sink ^= acc // consume: the fold must not be dead-code-eliminated
+    }
+    if (sink == 42L) System.err.println("") // keep `sink` observably live
+    sec
+  }
+
+  /** Disk: create, write and fsync 64 4-KiB files, the cost that
+    * dominates a streaming state-store commit. */
+  private def diskCalibration(runs: Int): Double = {
+    import java.nio.file.{Files, StandardOpenOption}
+    val dir = Files.createTempDirectory("graft_disk_cal")
+    val payload = Array.fill(4096)(7.toByte)
+    try minSeconds(runs, warmup = true) {
+      (0 until 64).foreach { i =>
+        val ch = java.nio.channels.FileChannel.open(dir.resolve(s"f$i"),
+          StandardOpenOption.CREATE, StandardOpenOption.WRITE,
+          StandardOpenOption.TRUNCATE_EXISTING)
+        try { ch.write(java.nio.ByteBuffer.wrap(payload)); ch.force(true) }
+        finally ch.close()
+      }
+    } finally {
+      (0 until 64).foreach(i => Files.deleteIfExists(dir.resolve(s"f$i")))
+      Files.deleteIfExists(dir)
+    }
+  }
+
+  /** Spark executors: a constant `range → xxhash64 → bit_xor` job (not
+    * sum: summing random 64-bit hashes overflows a long under ANSI). */
+  private def sparkCalibration(spark: SparkSession, runs: Int): Double =
+    minSeconds(runs, warmup = true) {
+      spark.range(0L, 100000000L, 1L, 32)
+        .agg(expr("bit_xor(xxhash64(id))")).collect()
+    }
+
+  /** Spark scheduler: a trivial two-stage shuffle job (32 map tasks over
+    * 32k rows), so the seconds are scheduling and stage-launch overhead. */
+  private def schedCalibration(spark: SparkSession, runs: Int): Double =
+    minSeconds(runs, warmup = true) {
+      spark.range(0L, 32768L, 1L, 32)
+        .groupBy(expr("id % 256")).count()
+        .agg(count(lit(1))).collect()
+    }
+
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("WARN")
@@ -22,13 +91,12 @@ object ScaleRehearsal {
 
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val invariants = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
-    // fixed-work host-state calibration (same kernels as Bench): rehearsal
-    // numbers drift with host load exactly like bench numbers did in round
-    // 4 — normalize cross-round deltas by the calibration ratio first
-    val calCpu = graft.Bench.cpuCalibration(2)
-    val calSpark = graft.Bench.sparkCalibration(spark, 2)
-    val calDisk = graft.Bench.diskCalibration(2)
-    val calSched = graft.Bench.schedCalibration(spark, 5)
+    // rehearsal timings drift with host load: normalize cross-round
+    // deltas by the calibration ratio first
+    val calCpu = cpuCalibration(2)
+    val calSpark = sparkCalibration(spark, 2)
+    val calDisk = diskCalibration(2)
+    val calSched = schedCalibration(spark, 5)
     println(f"[rehearsal] calibration cpu=$calCpu%.2f s spark=$calSpark%.2f s " +
       f"disk=$calDisk%.3f s sched=$calSched%.3f s")
     def writeArtifact(aborted: Boolean): Unit = {

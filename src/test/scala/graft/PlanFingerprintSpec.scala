@@ -4,13 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.PlanFingerprint
 
-/** Plan-skeleton locks for ALL bench headliners (VERDICT r11 ask #2):
-  * the q55 lesson is that a silent strategy flip hides inside bench
-  * noise until it costs seconds at 100× — so every headliner's join
-  * strategies, exchange count, window/top-k families, and scan
-  * pushdown are asserted against a committed fingerprint. A refactor
-  * that drifts any of them fails HERE, deterministically, not in a
-  * min-of-3 timing.
+/** Plan-skeleton locks for every headliner in `PlanFingerprint.headline`
+  * (VERDICT r11 ask #2): the q55 lesson is that a silent strategy flip
+  * hides inside timing noise until it costs seconds at 100× — so every
+  * headliner's join strategies, exchange count, window/top-k families,
+  * and scan pushdown are asserted against a committed fingerprint. A
+  * refactor that drifts any of them fails HERE, deterministically, not
+  * in a timing.
   *
   * The table is the static (AQE-initial) plan against the fixed
   * sf0.001 files — same code + same data ⇒ same skeleton. After an
@@ -102,7 +102,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
       "ex=1 bex=0 reuse=0 bhj=0 smj=0 shj=0 bnl=0 cart=0 win=0 wgl=0 top=0 sort=1 pushed=0 partf=0")
 
   test("every bench headliner is fingerprinted — no unlocked additions") {
-    val missing = Bench.headline.filterNot(committed.contains)
+    val missing = PlanFingerprint.headline.filterNot(committed.contains)
     assert(missing.isEmpty,
       s"headliners without a committed plan fingerprint: $missing — " +
         "run graft.tools.FingerprintProbe and add the rows")
@@ -139,7 +139,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
   }
 
   // one test per headliner so a drift names the query in the report
-  Bench.headline.foreach { q =>
+  PlanFingerprint.headline.foreach { q =>
     test(s"plan fingerprint: $q") {
       val got = PlanFingerprint.of(SparkEntry.queries(q)(spark, dir))
       assert(got == committed(q),

@@ -119,12 +119,18 @@ class QualitySpec extends AnyFunSuite {
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "totally unrelated content about spark planning"),
-      (3L, "prefix words then alpha beta gamma delta epsilon zeta suffix")
+      (3L, "prefix words then alpha beta gamma delta epsilon zeta suffix " +
+        "alpha beta gamma delta")
     ).toDF("doc_id", "text")
-    val benchmark = Seq("alpha beta gamma delta epsilon zeta").toDF("text")
+    val benchmark = Seq(
+      "alpha beta gamma delta epsilon zeta",
+      "beta gamma delta epsilon beta gamma delta epsilon").toDF("text")
     val got = Dedup.contaminationFlags(corpus, benchmark, "text", "doc_id", n = 4).get
       .as[(Long, Long)].collect().toMap
-    // benchmark has 3 distinct 4-grams; doc 1 contains all 3, doc 3 too
+    // the first benchmark doc has 3 distinct 4-grams and the second
+    // repeats one of them, within itself and across the two; doc 1
+    // contains all 3, and doc 3 too, with one of them twice. A gram
+    // counts once per corpus doc, however often either side repeats it
     assert(got == Map(1L -> 3L, 3L -> 3L))
   }
 

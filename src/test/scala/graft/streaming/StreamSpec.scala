@@ -600,15 +600,15 @@ class StreamSpec extends AnyFunSuite {
   test("neardupAgainst: pair survives when its EARLIEST colliding band " +
       "was bucket-capped (ADVICE r10 — batch parity under a hot bucket)") {
     implicit val sqlCtx = spark.sqlContext
-    // Fixture found by graft.tools.NeardupCapProbe: refDup is the base
-    // text, refHot replaces words 1 and 8, the stream doc replaces word
-    // 6. At bands=16/rowsPerBand=4 the stream doc collides with refDup
-    // in bands {5, 6, 15}; refHot collides with refDup in bands
-    // {2, 3, 5} — so with maxBucket = 1 the EARLIEST stream match
-    // (band 5) sits in a capped bucket and only bands 6/15 survive. A
-    // raw earlier-band key-equality predicate vetoes the surviving rows
-    // on band 5 and silently loses the pair; the surviving-band
-    // predicate keeps it.
+    // Fixture found by a search over word-replacement variants of one
+    // 30-word base text: refDup is the base text, refHot replaces words
+    // 1 and 8, the stream doc replaces word 6. At bands=16/rowsPerBand=4
+    // the stream doc collides with refDup in bands {5, 6, 15}; refHot
+    // collides with refDup in bands {2, 3, 5} — so with maxBucket = 1
+    // the EARLIEST stream match (band 5) sits in a capped bucket and only
+    // bands 6/15 survive. A raw earlier-band key-equality predicate
+    // vetoes the surviving rows on band 5 and silently loses the pair;
+    // the surviving-band predicate keeps it.
     val base = ("alpha bravo charlie delta echo foxtrot golf hotel india " +
       "juliett kilo lima mike november oscar papa quebec romeo sierra " +
       "tango uniform victor whiskey xray yankee zulu stone river cloud " +
@@ -629,7 +629,8 @@ class StreamSpec extends AnyFunSuite {
     val cSH = (0 until 16).filter(j => keyed(1L)(j) == keyed(2L)(j))
     assert(cX.nonEmpty && cS.nonEmpty && cX.contains(cS.head) &&
       cS.exists(j => !cX.contains(j)) && cSH.forall(cX.contains),
-      s"fixture drifted: cX=$cX cS=$cS cSH=$cSH — re-run NeardupCapProbe")
+      s"fixture drifted: cX=$cX cS=$cS cSH=$cSH — search the base text's " +
+        "word-replacement variants for a new triple with this band layout")
 
     val ref = Seq((0L, refDup), (1L, refHot)).toDF("doc_id", "text")
     val input = MemoryStream[(Long, String)]
